@@ -134,10 +134,48 @@ def test_hub_csr_budget_fallback(spark, monkeypatch):
     expected = triangle_count_kernel(e).collect()[0].triangles
     monkeypatch.setattr(T, "HUB_BUDGET_BYTES", 64)  # a few rows at most
     d = T.orient_dodg(e).localCheckpoint(eager=False)
-    adj = T.adjacency(d).localCheckpoint(eager=False)
-    hubs, flat = T._select_hub_csr(d, adj, hub_k=65536)
+    hubs, flat = T._select_hub_csr(d, hub_k=65536)
     assert hubs is None and flat is None  # the guard tripped
     assert T.triangle_count_kernel(e).collect()[0].triangles == expected
+
+
+@pytest.mark.parametrize("regime", ["full_csr", "hub_split", "join"])
+def test_kernel_variants_in_every_layout_regime(spark, monkeypatch, regime):
+    """All four kernel variants agree with the SQL plans in each layout
+    regime ``_kernel_layout`` can pick. Every unit graph is under the
+    full-CSR cap, so the hub-split and plain-join regimes are forced:
+    ``FULL_CSR_MAX_ROWS = 0`` skips the full-graph broadcast, and a 64-byte
+    budget also trips the hub-CSR guard."""
+    import trianglecounting_spark.operators.triangles as T
+
+    e = normalize_edges(g.rmat_graph(spark, scale=9, edge_factor=8)).localCheckpoint(True)
+    tri = triangle_count_sql(e).collect()[0].triangles
+    want = sorted(tuple(r) for r in T.triangle_enumerate(e).collect())
+    if regime == "hub_split":
+        monkeypatch.setattr(T, "FULL_CSR_MAX_ROWS", 0)
+    elif regime == "join":
+        monkeypatch.setattr(T, "HUB_BUDGET_BYTES", 64)
+    d = T.orient_dodg(e).localCheckpoint(True)
+
+    # the regime was actually taken: no list column = full CSR; a non-empty
+    # broadcast next to the list column = hub split; no broadcast = join
+    laid_out, hub_bc = T._kernel_layout(d)
+    if regime == "full_csr":
+        assert "nbrs" not in laid_out.columns and hub_bc is not None
+    else:
+        assert "nbrs" in laid_out.columns
+        assert (hub_bc is not None and len(hub_bc.value[0]) > 0) == (regime == "hub_split")
+
+    assert triangle_count_kernel(e).collect()[0].triangles == tri > 0
+    per_edge = (
+        triangle_count_per_directed_edge_kernel(e)
+        .agg(F.sum("cnt").alias("s"), F.count(F.lit(1)).alias("n"))
+        .collect()[0]
+    )
+    assert (per_edge.s, per_edge.n) == (tri, d.count())
+    assert sorted(tuple(r) for r in T.triangle_enumerate_kernel(e).collect()) == want
+    support = T.triangle_support_counts_oriented(d).agg(F.sum("support")).collect()[0][0]
+    assert support == 3 * tri
 
 
 def test_triangle_count_delta_matches_recount(spark):

@@ -30,16 +30,18 @@ adj = adjacency(d, 128).localCheckpoint(True)
 print(f"adjacency: {time.time()-t0:.1f}s  rows={adj.count()}", flush=True)
 
 t0 = time.time()
-laid_out, hub_bc = T._edges_with_dst_adjacency(edges, 128)
+laid_out, hub_bc = T._kernel_layout(d, 128)
 joined = laid_out.localCheckpoint(True)
 rows = joined.count()
-nbr_vol = joined.select(F.sum(F.size(F.coalesce(F.col("nbrs"), F.array())))).collect()[0][0]
+# the full-CSR layout ships no list column: every dst resolves via the broadcast
+nbr_vol = (joined.select(F.sum(F.size(F.coalesce(F.col("nbrs"), F.array())))).collect()[0][0]
+           if "nbrs" in joined.columns else 0)
 ids, offs, vals = hub_bc.value if hub_bc is not None else (None, None, [])
 print(f"hub+join+layout: {time.time()-t0:.1f}s rows={rows} shipped_nbr_elems={nbr_vol} "
       f"hub_elems={len(vals)}", flush=True)
 
 t0 = time.time()
-partials = joined.mapInArrow(T._make_tc_partition(hub_bc), schema="tri_cnt long, probes long")
+partials = joined.mapInArrow(T._kernel(T._emit_count, hub_bc), schema="tri_cnt long, probes long")
 tri = partials.agg(F.sum("tri_cnt")).collect()[0][0]
 print(f"kernel only: {time.time()-t0:.1f}s  tri={tri}", flush=True)
 

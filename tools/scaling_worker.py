@@ -27,10 +27,11 @@ def main() -> None:
 
     from trianglecounting_spark.session import get_spark
     from trianglecounting_spark.sources import generators as g
-    from trianglecounting_spark.operators.normalize import normalize_edges
+    from trianglecounting_spark.operators.normalize import normalize_edges, orient_dodg
     from trianglecounting_spark.operators.triangles import (
-        _edges_with_dst_adjacency,
-        _make_tc_partition,
+        _emit_count,
+        _kernel,
+        _kernel_layout,
         triangle_count_kernel,
         triangle_count_sql,
     )
@@ -61,7 +62,7 @@ def main() -> None:
     # counting kernel on a BUILT CSR — BASELINE.md reports "kernel" and
     # "total" separately), then time the set-intersection stage best-of-N
     # (the sandbox hypervisor shows ~2x run-to-run noise).
-    laid_out, hub_bc = _edges_with_dst_adjacency(edges, 128)
+    laid_out, hub_bc = _kernel_layout(orient_dodg(edges).localCheckpoint(eager=False), 128)
     laid_out = laid_out.localCheckpoint(eager=True)
     laid_out.count()
     # one UNTIMED full-size pass first: Python worker pool spawn, hub-CSR
@@ -71,7 +72,7 @@ def main() -> None:
     # (more workers to warm). The reference's kernel timings likewise exclude
     # one-time setup (BASELINE.md reports kernel vs total separately).
     laid_out.mapInArrow(
-        _make_tc_partition(hub_bc), schema="tri_cnt long, probes long"
+        _kernel(_emit_count, hub_bc), schema="tri_cnt long, probes long"
     ).agg(F.sum("tri_cnt")).collect()
     t_kernel = float("inf")
     tri_kernel = probes = None
@@ -79,7 +80,7 @@ def main() -> None:
         t0 = time.time()
         row = (
             laid_out.mapInArrow(
-                _make_tc_partition(hub_bc), schema="tri_cnt long, probes long"
+                _kernel(_emit_count, hub_bc), schema="tri_cnt long, probes long"
             )
             .agg(
                 F.sum("tri_cnt").cast("long").alias("triangles"),

@@ -31,10 +31,9 @@ wedge-candidate volume — kept as the declarative differential oracle.
 
 from __future__ import annotations
 
-
+import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from trianglecounting_spark.operators.normalize import adjacency, orient_dodg, undirect
@@ -45,33 +44,24 @@ from trianglecounting_spark.operators.normalize import adjacency, orient_dodg, u
 # ---------------------------------------------------------------------------
 
 def triangle_count_sql(edges: DataFrame) -> DataFrame:
-    """Global exact triangle count via three-way self-join of the DODG.
-
-    Plan: e1(a,b) ⋈ e2(b,c) on b ⋈ e3(a,c) on (a,c) → count(*).
-    Each triangle {x,y,z} with rank x<y<z matches exactly once with
-    a=x, b=y, c=z (DODG property, `pre_processing_dodg.h:6-9`).
-    Output: one row ``(triangles: long)``.
+    """Global exact triangle count: ``count(*)`` over ``triangle_enumerate``'s
+    three-way self-join of the DODG. Output: one row ``(triangles: long)``.
     """
-    # materialize the DODG once (lazy localCheckpoint): the three self-join
-    # branches would otherwise each recompute the degree aggregation and
-    # orientation joins — AQE does not reuse those exchanges across branches
-    d = orient_dodg(edges).localCheckpoint(eager=False)
-    e1 = d.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    e2 = d.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    e3 = d.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-    return (
-        e1.join(e2, "b")
-        .join(e3, ["a", "c"])
-        .agg(F.count(F.lit(1)).cast("long").alias("triangles"))
+    return triangle_enumerate(edges).agg(
+        F.count(F.lit(1)).cast("long").alias("triangles")
     )
 
 
 def triangle_enumerate(edges: DataFrame) -> DataFrame:
     """Materialize each triangle once as ``(a, b, c)`` with rank a < b < c.
 
-    Same join as ``triangle_count_sql`` without the final aggregate; feeds
-    per-edge support and k-truss.
+    Plan: e1(a,b) ⋈ e2(b,c) on b ⋈ e3(a,c) on (a,c). Each triangle {x,y,z}
+    with rank x<y<z matches exactly once with a=x, b=y, c=z (DODG property,
+    `pre_processing_dodg.h:6-9`). Feeds per-edge support and k-truss.
     """
+    # materialize the DODG once (lazy localCheckpoint): the three self-join
+    # branches would otherwise each recompute the degree aggregation and
+    # orientation joins — AQE does not reuse those exchanges across branches
     d = orient_dodg(edges).localCheckpoint(eager=False)
     e1 = d.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     e2 = d.select(F.col("src").alias("b"), F.col("dst").alias("c"))
@@ -89,20 +79,9 @@ def triangle_per_edge_support(edges: DataFrame) -> DataFrame:
     """
     # kernel support counts with in-partition partial aggregation (round 6:
     # replaces the 3-per-triangle explode + full-row groupBy; the SMJ
-    # enumerate remains the differential oracle via the SQL path). Corners
-    # are in RANK order (deg, id) — canonicalize each pair by id so it
-    # joins the (u < v by id) edge table.
+    # enumerate remains the differential oracle via the SQL path)
     d = orient_dodg(edges).localCheckpoint(eager=False)
-    counts = triangle_support_counts_oriented(d)
-    support = counts.select(
-        F.least("src", "dst").alias("u"),
-        F.greatest("src", "dst").alias("v"),
-        "support",
-    )
-    return (
-        edges.join(support, ["u", "v"], "left")
-        .select("u", "v", F.coalesce("support", F.lit(0)).cast("long").alias("support"))
-    )
+    return _canonical_support(edges, triangle_support_counts_oriented(d))
 
 
 def triangle_per_edge_support_oriented(
@@ -231,8 +210,8 @@ def clustering_by_degree(edges: DataFrame) -> DataFrame:
 # cost model is different: per-CALL dispatch overhead (~µs) dominates
 # per-element cost, so the winning move is to batch EVERY pair of a src group
 # into a single `searchsorted` over the concatenated neighbor segments
-# (`_hits` / the reduceat variants below) — one vectorized binary search per
-# group, the galloping analogue, regardless of size ratio. A per-pair
+# (`_intersect_groups`) — one vectorized binary search per group and probe
+# source, the galloping analogue, regardless of size ratio. A per-pair
 # merge/gallop dispatch was measured slower at every ratio because it
 # re-introduces per-pair Python/numpy call overhead; it is therefore not
 # implemented.
@@ -251,10 +230,17 @@ def clustering_by_degree(edges: DataFrame) -> DataFrame:
 # What survives from that experiment: the per-group `np.sort` is hoisted into
 # one stable partition-wide lexsort below (sorted neighbor sets become views,
 # zero per-group allocations).
+#
+# The four kernel variants (count, per-directed-edge, enumerate, support
+# partials) share that one group loop and differ only in what they emit.
 
 
-def _partition_views(tbl, hub_idx):
-    """One partition's (src, dst, nbrs) Arrow table → zero-copy numpy views.
+def _partition_views(batches, hub_idx):
+    """One partition's (src, dst[, nbrs]) Arrow batches → zero-copy numpy views.
+
+    The partition is one CSR block (src groups are contiguous thanks to
+    sortWithinPartitions), so whole-partition processing needs no
+    batch-boundary carry logic.
 
     Returns (srcs, dsts, j_offsets, j_values, hub_pos):
       * j_values / j_offsets — the list column's raw Arrow buffers: this is
@@ -267,6 +253,13 @@ def _partition_views(tbl, hub_idx):
         vectorized searchsorted.
     Nothing here is O(neighbor volume); peak extra memory is O(rows).
     """
+    import pyarrow as pa
+
+    rbs = [rb for rb in batches if rb.num_rows > 0]
+    if not rbs:
+        empty = np.empty(0, dtype=np.int64)
+        return empty, empty, np.zeros(1, dtype=np.int64), empty, empty
+    tbl = pa.Table.from_batches(rbs)
     srcs = tbl.column("src").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     dsts = tbl.column("dst").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     n = len(srcs)
@@ -297,270 +290,215 @@ def _partition_views(tbl, hub_idx):
     return srcs, dsts, j_offsets, j_values, hub_pos
 
 
-def _group_bounds(srcs: np.ndarray) -> np.ndarray:
-    """Segment boundaries of the (sorted) src column: [0, ..., n]."""
-    n = len(srcs)
-    changes = np.flatnonzero(srcs[1:] != srcs[:-1]) + 1
-    return np.concatenate((np.array([0], dtype=np.int64), changes,
-                           np.array([n], dtype=np.int64)))
+def _intersect_groups(srcs, dsts, j_offsets, j_values, hub_pos, hub_idx):
+    """The intersection loop of every kernel variant.
+
+    Per src group u and non-empty probe source — first the group's *joined*
+    neighbor data (a contiguous zero-copy slice of the Arrow values buffer),
+    then the group's hub rows against the broadcast CSR — yields
+    ``(seg, hit, rows, starts)``: ``hit = seg ∈ N⁺(u)`` from ONE vectorized
+    binary search (numpy's analogue of the reference's galloping intersector
+    J5, `util/set_inter_cnt_utils.h:13-48`), and
+    ``seg[starts[j]:starts[j+1]]`` is N⁺(dst) of partition row ``rows[j]``
+    (empty for rows the other source covers). Nothing is gathered except one
+    group's hub segments, so peak memory stays O(rows), immune to
+    wedge-volume skew.
+    """
+    offs = vals = None
+    if hub_idx is not None:
+        _ids, offs, vals = hub_idx
+    hub_rows = np.flatnonzero(hub_pos >= 0)
+    bounds = np.concatenate(([0], np.flatnonzero(srcs[1:] != srcs[:-1]) + 1, [len(srcs)]))
+    # one stable partition-wide sort replaces a np.sort per group: group
+    # boundaries are unchanged (srcs is the major key), so each group's
+    # sorted neighbor set is a zero-copy VIEW of sdsts
+    sdsts = dsts[np.lexsort((dsts, srcs))]
+
+    def probe(nbrs_u, seg, rows, starts):
+        idx = np.searchsorted(nbrs_u, seg)
+        idx[idx == len(nbrs_u)] = len(nbrs_u) - 1
+        return seg, nbrs_u[idx] == seg, rows, starts
+
+    lo = 0
+    for k in range(len(bounds) - 1):
+        gs, ge = bounds[k], bounds[k + 1]
+        nbrs_u = sdsts[gs:ge]
+        base = j_offsets[gs]
+        if j_offsets[ge] > base:
+            yield probe(nbrs_u, j_values[base:j_offsets[ge]], np.arange(gs, ge),
+                        j_offsets[gs:ge + 1] - base)
+        hi = np.searchsorted(hub_rows, ge, side="left")
+        if hi > lo:
+            # batch the group's hub segments: views → one concat → ONE
+            # vectorized search (per-row numpy dispatch would cost ~40µs/row;
+            # this is volume-bound). Peak memory = one group's hub volume ≤
+            # outdeg(u)·max_hub_len — bounded.
+            rows = hub_rows[lo:hi]
+            ps = hub_pos[rows]
+            first, last = offs[ps], offs[ps + 1]
+            starts = np.zeros(len(ps) + 1, dtype=np.int64)
+            np.cumsum(last - first, out=starts[1:])
+            # Python-int slice bounds: numpy-scalar indexing per row costs more
+            segs = [vals[a:b] for a, b in zip(first.tolist(), last.tolist())]
+            if starts[-1]:
+                yield probe(nbrs_u, np.concatenate(segs) if len(segs) > 1 else segs[0],
+                            rows, starts)
+            lo = hi
 
 
-def _partition_table(batches):
-    """Concatenate a partition's Arrow batches into one table (the partition
-    is one CSR block; src groups are contiguous thanks to
-    sortWithinPartitions, and whole-partition processing needs no
-    batch-boundary carry logic). Returns None for an empty partition."""
+def _kernel(emit, hub_bc):
+    """The ``mapInArrow`` function of a kernel variant: one partition's views
+    and group iterator are handed to ``emit(srcs, dsts, groups)``, which
+    yields the output batches."""
+
+    def run(batches):
+        hub_idx = hub_bc.value if hub_bc is not None else None
+        srcs, dsts, j_offsets, j_values, hub_pos = _partition_views(batches, hub_idx)
+        return emit(srcs, dsts,
+                    _intersect_groups(srcs, dsts, j_offsets, j_values, hub_pos, hub_idx))
+
+    return run
+
+
+def _emit_count(srcs, dsts, groups):
+    """One partial row per partition: ``(tri_cnt, probes)`` where probes =
+    the number of intersection candidates binary-searched (Σ |N⁺(dst)| over
+    the partition's edges — the instrumented work counter the reference
+    reports as probes/MP-sec, `2017-karypis-hepc-tc/ptc.c:282-397`,
+    `main.c:49-51`)."""
     import pyarrow as pa
 
-    rbs = [rb for rb in batches if rb.num_rows > 0]
-    if not rbs:
+    total = probes = 0
+    for seg, hit, _rows, _starts in groups:
+        total += int(np.count_nonzero(hit))
+        probes += int(seg.size)
+    yield pa.RecordBatch.from_pydict(
+        {"tri_cnt": pa.array([total], pa.int64()), "probes": pa.array([probes], pa.int64())}
+    )
+
+
+def _emit_per_edge(srcs, dsts, groups):
+    """``(src, dst, cnt)`` for every partition row: one ``reduceat`` of the
+    hits per probe source."""
+    import pyarrow as pa
+
+    counts = np.zeros(len(srcs), dtype=np.int64)
+    for _seg, hit, rows, starts in groups:
+        # reduceat gives an empty segment its successor's first element: skip
+        nonempty = starts[1:] > starts[:-1]
+        counts[rows[nonempty]] = np.add.reduceat(hit, starts[:-1][nonempty], dtype=np.int64)
+    yield pa.RecordBatch.from_pydict(
+        {"src": pa.array(srcs, pa.int64()), "dst": pa.array(dsts, pa.int64()),
+         "cnt": pa.array(counts, pa.int64())}
+    )
+
+
+def _triangles(srcs, dsts, groups):
+    """Every triangle of the partition once, as numpy columns (a, b, c):
+    a = src, b = dst, c = the matched common out-neighbor. None if there
+    are none."""
+    out_a, out_b, out_c = [], [], []
+    for seg, hit, rows, starts in groups:
+        pos = np.flatnonzero(hit)
+        if pos.size:
+            # row attribution: position → owning row via the segment starts
+            row = rows[np.searchsorted(starts, pos, side="right") - 1]
+            out_a.append(srcs[row])
+            out_b.append(dsts[row])
+            out_c.append(seg[pos])
+    if not out_a:
         return None
-    return pa.Table.from_batches(rbs)
+    return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_c)
 
 
-def _hits(nbrs_u: np.ndarray, seg: np.ndarray) -> int:
-    """|{x ∈ seg : x ∈ nbrs_u}| for sorted nbrs_u — the intersection-count
-    primitive (numpy binary search ≈ the reference's galloping intersector
-    J5, `util/set_inter_cnt_utils.h:13-48`)."""
-    idx = np.searchsorted(nbrs_u, seg)
-    idx[idx == len(nbrs_u)] = len(nbrs_u) - 1
-    return int(np.count_nonzero(nbrs_u[idx] == seg))
+def _emit_enumerate(srcs, dsts, groups):
+    """Each triangle once as (a, b, c) — exactly one row per triangle, the
+    kernel analogue of the declarative ``triangle_enumerate`` without the
+    three-way sort-merge join."""
+    import pyarrow as pa
 
-
-def _make_tc_partition(hub_bc):
-    """Whole-partition kernel (mapInArrow).
-
-    Per src group: one vectorized count over the group's *joined* neighbor
-    data (a contiguous zero-copy slice of the Arrow values buffer), plus one
-    vectorized count per *hub* row against the broadcast CSR (a view —
-    nothing is ever gathered/copied, so peak memory stays O(rows), immune to
-    wedge-volume skew). Emits one partial row per partition:
-    ``(tri_cnt, probes)`` where probes = the number of intersection
-    candidates binary-searched (Σ |N⁺(dst)| over the partition's edges — the
-    instrumented work counter the reference reports as probes/MP-sec,
-    `2017-karypis-hepc-tc/ptc.c:282-397`, `main.c:49-51`). The public count
-    queries aggregate only tri_cnt; callers attach ``df.observe`` to read the
-    probe totals without a second job."""
-
-    def run(batches):
-        import pyarrow as pa
-
-        hub_idx = hub_bc.value if hub_bc is not None else None
-        tbl = _partition_table(batches)
-        total = 0
-        probes = 0
-        if tbl is not None:
-            srcs, dsts, j_offsets, j_values, hub_pos = _partition_views(tbl, hub_idx)
-            offs = vals = None
-            if hub_idx is not None:
-                _ids, offs, vals = hub_idx
-            hub_rows = np.flatnonzero(hub_pos >= 0)
-            bounds = _group_bounds(srcs)
-            # one stable partition-wide sort replaces a np.sort per group:
-            # group boundaries are unchanged (srcs is the major key), so each
-            # group's sorted neighbor set is a zero-copy VIEW of sdsts
-            sdsts = dsts[np.lexsort((dsts, srcs))]
-            lo = 0
-            for k in range(len(bounds) - 1):
-                gs, ge = bounds[k], bounds[k + 1]
-                nbrs_u = sdsts[gs:ge]
-                jseg = j_values[j_offsets[gs]:j_offsets[ge]]
-                if jseg.size:
-                    total += _hits(nbrs_u, jseg)
-                    probes += int(jseg.size)
-                hi = np.searchsorted(hub_rows, ge, side="left")
-                if hi > lo:
-                    # batch the group's hub segments: views → one concat →
-                    # ONE vectorized search (per-row numpy dispatch would cost
-                    # ~40µs/row; this is volume-bound). Peak memory = one
-                    # group's hub volume ≤ outdeg(u)·max_hub_len — bounded.
-                    ps = hub_pos[hub_rows[lo:hi]]
-                    segs = [vals[offs[p]:offs[p + 1]] for p in ps]
-                    hseg = np.concatenate(segs) if len(segs) > 1 else segs[0]
-                    if hseg.size:
-                        total += _hits(nbrs_u, hseg)
-                        probes += int(hseg.size)
-                lo = hi
-        yield pa.RecordBatch.from_pydict(
-            {
-                "tri_cnt": pa.array([total], pa.int64()),
-                "probes": pa.array([probes], pa.int64()),
-            }
+    tris = _triangles(srcs, dsts, groups)
+    if tris is not None:
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(x, pa.int64()) for x in tris], names=["a", "b", "c"]
         )
 
-    return run
+
+def _emit_support_partial(srcs, dsts, groups):
+    """Per-partition PARTIAL per-edge support: every triangle (a, b, c)
+    found here contributes +1 to its three edges (a,b), (a,c), (b,c) —
+    pre-aggregated inside the partition with one numpy lexsort+run-length
+    pass, so the downstream groupBy-sum moves one row per partition-distinct
+    edge instead of three rows per triangle (the map-side combine the
+    Catalyst explode+count could not do across the Arrow boundary). Pairs
+    stay in rank order = the DODG's oriented rows; edges in no triangle are
+    absent (support 0)."""
+    import pyarrow as pa
+
+    tris = _triangles(srcs, dsts, groups)
+    if tris is None:
+        return
+    a, b, c = tris
+    xs = np.concatenate((a, a, b))
+    ys = np.concatenate((b, c, c))
+    order = np.lexsort((ys, xs))
+    xs, ys = xs[order], ys[order]
+    new = np.empty(len(xs), dtype=bool)
+    new[0] = True
+    new[1:] = (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1])
+    starts = np.flatnonzero(new)
+    cnts = np.diff(np.append(starts, len(xs)))
+    yield pa.RecordBatch.from_pydict(
+        {
+            "src": pa.array(xs[starts], pa.int64()),
+            "dst": pa.array(ys[starts], pa.int64()),
+            "cnt": pa.array(cnts.astype(np.int64), pa.int64()),
+        }
+    )
 
 
-def _make_tc_partition_per_edge(hub_bc):
-    def run(batches):
-        import pyarrow as pa
-
-        hub_idx = hub_bc.value if hub_bc is not None else None
-        tbl = _partition_table(batches)
-        if tbl is None:
-            return
-        srcs, dsts, j_offsets, j_values, hub_pos = _partition_views(tbl, hub_idx)
-        offs = vals = None
-        if hub_idx is not None:
-            _ids, offs, vals = hub_idx
-        counts = np.zeros(len(srcs), dtype=np.int64)
-        hub_rows = np.flatnonzero(hub_pos >= 0)
-        bounds = _group_bounds(srcs)
-        sdsts = dsts[np.lexsort((dsts, srcs))]  # see _make_tc_partition
-        lo = 0
-        for k in range(len(bounds) - 1):
-            gs, ge = bounds[k], bounds[k + 1]
-            base = j_offsets[gs]
-            jseg = j_values[base:j_offsets[ge]]
-            nbrs_u = sdsts[gs:ge]
-            if jseg.size:
-                idx = np.searchsorted(nbrs_u, jseg)
-                idx[idx == len(nbrs_u)] = len(nbrs_u) - 1
-                h = (nbrs_u[idx] == jseg).astype(np.int64)
-                starts = (j_offsets[gs:ge] - base).astype(np.int64)
-                lens = np.diff(j_offsets[gs:ge + 1])
-                nonempty = lens > 0
-                if nonempty.any():
-                    counts[gs:ge][nonempty] = np.add.reduceat(h, starts[nonempty])
-            hi = np.searchsorted(hub_rows, ge, side="left")
-            if hi > lo:
-                rows_here = hub_rows[lo:hi]
-                ps = hub_pos[rows_here]
-                segs = [vals[offs[p]:offs[p + 1]] for p in ps]
-                hseg = np.concatenate(segs) if len(segs) > 1 else segs[0]
-                if hseg.size:
-                    idx = np.searchsorted(nbrs_u, hseg)
-                    idx[idx == len(nbrs_u)] = len(nbrs_u) - 1
-                    h = (nbrs_u[idx] == hseg).astype(np.int64)
-                    seg_lens = (offs[ps + 1] - offs[ps]).astype(np.int64)
-                    starts = np.zeros(len(ps), dtype=np.int64)
-                    np.cumsum(seg_lens[:-1], out=starts[1:])
-                    ne = seg_lens > 0
-                    if ne.any():
-                        counts[rows_here[ne]] = np.add.reduceat(h, starts[ne])
-            lo = hi
-        yield pa.RecordBatch.from_pydict(
-            {"src": pa.array(srcs, pa.int64()), "dst": pa.array(dsts, pa.int64()),
-             "cnt": pa.array(counts, pa.int64())}
+def _count(laid_out: DataFrame, hub_bc, observation=None) -> DataFrame:
+    """Kernel count partials → one row ``(triangles: long)``; the optional
+    ``observation`` reads the probe/hit totals off the same job."""
+    partials = laid_out.mapInArrow(
+        _kernel(_emit_count, hub_bc), schema="tri_cnt long, probes long"
+    )
+    if observation is not None:
+        partials = partials.observe(
+            observation,
+            F.sum("probes").alias("probes"),
+            F.sum("tri_cnt").alias("hits"),
         )
-
-    return run
-
-
-def _make_tc_partition_enumerate(hub_bc):
-    """Kernel variant that EMITS each triangle once as (a, b, c):
-    a = src, b = dst, c = the matched common out-neighbor. The materialized
-    output is exactly one row per triangle — the kernel analogue of the
-    declarative ``triangle_enumerate`` without the three-way sort-merge join.
-    """
-
-    def run(batches):
-        import pyarrow as pa
-
-        hub_idx = hub_bc.value if hub_bc is not None else None
-        tbl = _partition_table(batches)
-        if tbl is None:
-            return
-        srcs, dsts, j_offsets, j_values, hub_pos = _partition_views(tbl, hub_idx)
-        offs = vals = None
-        if hub_idx is not None:
-            _ids, offs, vals = hub_idx
-        hub_rows = np.flatnonzero(hub_pos >= 0)
-        bounds = _group_bounds(srcs)
-        sdsts = dsts[np.lexsort((dsts, srcs))]  # see _make_tc_partition
-        out_a, out_b, out_c = [], [], []
-        lo = 0
-        for k in range(len(bounds) - 1):
-            gs, ge = bounds[k], bounds[k + 1]
-            nbrs_u = sdsts[gs:ge]
-            base = j_offsets[gs]
-            jseg = j_values[base:j_offsets[ge]]
-            if jseg.size:
-                idx = np.searchsorted(nbrs_u, jseg)
-                idx[idx == len(nbrs_u)] = len(nbrs_u) - 1
-                hit = nbrs_u[idx] == jseg
-                if hit.any():
-                    pos = np.flatnonzero(hit)
-                    # row attribution: position → owning row via offsets
-                    row = np.searchsorted(j_offsets[gs:ge + 1], base + pos, side="right") - 1 + gs
-                    out_a.append(srcs[row])
-                    out_b.append(dsts[row])
-                    out_c.append(jseg[pos])
-            hi = np.searchsorted(hub_rows, ge, side="left")
-            if hi > lo:
-                rows_here = hub_rows[lo:hi]
-                ps = hub_pos[rows_here]
-                segs = [vals[offs[p]:offs[p + 1]] for p in ps]
-                hseg = np.concatenate(segs) if len(segs) > 1 else segs[0]
-                if hseg.size:
-                    idx = np.searchsorted(nbrs_u, hseg)
-                    idx[idx == len(nbrs_u)] = len(nbrs_u) - 1
-                    hit = nbrs_u[idx] == hseg
-                    if hit.any():
-                        pos = np.flatnonzero(hit)
-                        seg_lens = (offs[ps + 1] - offs[ps]).astype(np.int64)
-                        seg_starts = np.zeros(len(ps) + 1, dtype=np.int64)
-                        np.cumsum(seg_lens, out=seg_starts[1:])
-                        row = rows_here[
-                            np.searchsorted(seg_starts, pos, side="right") - 1
-                        ]
-                        out_a.append(srcs[row])
-                        out_b.append(dsts[row])
-                        out_c.append(hseg[pos])
-            lo = hi
-        if out_a:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "a": pa.array(np.concatenate(out_a), pa.int64()),
-                    "b": pa.array(np.concatenate(out_b), pa.int64()),
-                    "c": pa.array(np.concatenate(out_c), pa.int64()),
-                }
-            )
-
-    return run
+    # coalesce: an empty graph (zero partitions after AQE) must count 0,
+    # not NULL — the incremental-delta path feeds empty batches here
+    return partials.agg(
+        F.coalesce(F.sum("tri_cnt"), F.lit(0)).cast("long").alias("triangles")
+    )
 
 
-def _make_tc_partition_support_partial(hub_bc):
-    """Kernel variant emitting per-partition PARTIAL per-edge support:
-    every triangle (a, b, c) found here contributes +1 to its three edges
-    (a,b), (a,c), (b,c) — pre-aggregated inside the partition with one
-    numpy lexsort+run-length pass, so the downstream groupBy-sum moves one
-    row per partition-distinct edge instead of three rows per triangle
-    (the map-side combine the Catalyst explode+count could not do across
-    the Arrow boundary). Pairs stay in rank order = the DODG's oriented
-    rows; edges in no triangle are absent (support 0)."""
+def _support_counts(laid_out: DataFrame, hub_bc) -> DataFrame:
+    """Support partials → ``(src, dst, support)`` per oriented row in ≥ 1
+    triangle: one groupBy-sum, no 3-per-triangle explode."""
+    partials = laid_out.mapInArrow(
+        _kernel(_emit_support_partial, hub_bc), schema="src long, dst long, cnt long"
+    )
+    return partials.groupBy("src", "dst").agg(
+        F.sum("cnt").cast("long").alias("support")
+    )
 
-    def run(batches):
-        import pyarrow as pa
 
-        enum = _make_tc_partition_enumerate(hub_bc)
-        pairs_x, pairs_y = [], []
-        for rb in enum(batches):
-            a = rb.column("a").to_numpy(zero_copy_only=False)
-            b = rb.column("b").to_numpy(zero_copy_only=False)
-            c = rb.column("c").to_numpy(zero_copy_only=False)
-            pairs_x.append(np.concatenate((a, a, b)))
-            pairs_y.append(np.concatenate((b, c, c)))
-        if not pairs_x:
-            return
-        xs = np.concatenate(pairs_x)
-        ys = np.concatenate(pairs_y)
-        order = np.lexsort((ys, xs))
-        xs, ys = xs[order], ys[order]
-        new = np.empty(len(xs), dtype=bool)
-        new[0] = True
-        new[1:] = (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1])
-        starts = np.flatnonzero(new)
-        cnts = np.diff(np.append(starts, len(xs)))
-        yield pa.RecordBatch.from_pydict(
-            {
-                "src": pa.array(xs[starts], pa.int64()),
-                "dst": pa.array(ys[starts], pa.int64()),
-                "cnt": pa.array(cnts.astype(np.int64), pa.int64()),
-            }
-        )
-
-    return run
+def _canonical_support(edges_uv: DataFrame, counts: DataFrame) -> DataFrame:
+    """Oriented support counts → ``(u, v, support)`` for every canonical
+    (u < v) edge, 0 kept. Corners are in RANK order (deg, id), so each pair
+    is canonicalized by id before it joins the edge table."""
+    support = counts.select(
+        F.least("src", "dst").alias("u"),
+        F.greatest("src", "dst").alias("v"),
+        "support",
+    )
+    return edges_uv.join(support, ["u", "v"], "left").select(
+        "u", "v", F.coalesce("support", F.lit(0)).cast("long").alias("support")
+    )
 
 
 def triangle_support_counts_oriented(
@@ -572,22 +510,13 @@ def triangle_support_counts_oriented(
     """Per-edge triangle support over an already-oriented edge table, WITHOUT
     zero-support rows: ``(src, dst, support)`` keyed on the oriented rows,
     only for edges in ≥ 1 triangle. One kernel pass with in-partition
-    partial aggregation (``_make_tc_partition_support_partial``) + one
-    groupBy-sum — no 3-per-triangle explode, no join back to the edge
-    table. The k-truss peel (k ≥ 3) filters ``support >= k-2 >= 1``, so the
-    absent zero rows are exactly the rows the filter would drop.
+    partial aggregation (``_emit_support_partial``) + one groupBy-sum — no
+    3-per-triangle explode, no join back to the edge table. The k-truss peel
+    (k ≥ 3) filters ``support >= k-2 >= 1``, so the absent zero rows are
+    exactly the rows the filter would drop.
     ``n_rows``: the caller's known row count of ``d`` (skips the layout's
     budget-probe count job — the peel loop already counts every round)."""
-    adj = adjacency(d, num_partitions).localCheckpoint(eager=False)
-    laid_out, hub_bc = _layout_from_dodg(d, adj, num_partitions, hub_k,
-                                         n_rows=n_rows)
-    partials = laid_out.mapInArrow(
-        _make_tc_partition_support_partial(hub_bc),
-        schema="src long, dst long, cnt long",
-    )
-    return partials.groupBy("src", "dst").agg(
-        F.sum("cnt").cast("long").alias("support")
-    )
+    return _support_counts(*_kernel_layout(d, num_partitions, hub_k, n_rows))
 
 
 def triangle_enumerate_kernel(
@@ -607,108 +536,25 @@ def triangle_enumerate_from_dodg(
     """`triangle_enumerate_kernel` over an already-materialized DODG —
     callers that also join against the DODG afterwards (e.g. the 4-clique
     extension in `operators/motifs.py`) build it once and share it."""
-    adj = adjacency(d, num_partitions).localCheckpoint(eager=False)
-    laid_out, hub_bc = _layout_from_dodg(d, adj, num_partitions, hub_k)
+    laid_out, hub_bc = _kernel_layout(d, num_partitions, hub_k)
     return laid_out.mapInArrow(
-        _make_tc_partition_enumerate(hub_bc), schema="a long, b long, c long"
+        _kernel(_emit_enumerate, hub_bc), schema="a long, b long, c long"
     )
 
 
-def _edges_with_dst_adjacency(
-    edges: DataFrame, num_partitions: int | None, hub_k: int | None = None
-):
-    """DODG edges joined with the adjacency list of their *destination*,
-    co-partitioned + sorted by src for the partition kernel, with the hub
-    path: the top-``hub_k`` destinations by DODG in-degree are EXCLUDED from
-    the join and their (short — high rank ⇒ low out-degree) adjacency lists
-    broadcast instead.
-
-    Rationale: the join replicates N⁺(dst) once per in-edge of dst, i.e.
-    Σ indeg·outdeg = the wedge count — the dominant data volume on power-law
-    graphs, concentrated on high-in-degree hubs. Broadcasting those lists is
-    the re-expression of the reference's dense-hub-range bitmap/packed-words
-    strategy (J2/J3, `triangle_counting.h:9,11-34`): pay O(hub lists) once per
-    executor instead of once per edge.
-
-    Left join keeps sink vertices (empty N⁺(dst)) — they contribute 0. The
-    final repartition(src) + sortWithinPartitions(src) makes every src group
-    contiguous — the DataFrame analogue of the reference's CSR row layout
-    (`util/graph.h:11-12`).
-
-    Returns (laid_out_df, hub_broadcast_or_None).
-    """
-    d = orient_dodg(edges).localCheckpoint(eager=False)
-    # adjacency is referenced by the hub-collect job AND the kernel job —
-    # materialize once (lazy localCheckpoint), don't rebuild the collect_list
-    adj = adjacency(d, num_partitions).localCheckpoint(eager=False)
-    return _layout_from_dodg(d, adj, num_partitions, hub_k)
-
-
-def _layout_from_dodg(
-    d: DataFrame,
-    adj: DataFrame,
-    num_partitions: int | None,
-    hub_k: int | None = None,
-    full_csr: bool = True,
-    n_rows: int | None = None,
-):
-    """Core of the kernel layout, shared by the edge-derived path above and
-    the pre-bucketed-table path (`bucketed_kernel_layout`): hub split + the
-    edges ⋈ dst-adjacency join + the src CSR grouping. When ``d``/``adj`` come
-    from tables bucketed by dst/src, the join plans with ZERO shuffle
-    exchanges (both scans already satisfy the join distribution) — the
-    SURVEY §4 "bucketed write" layout contract.
-
-    Full-CSR fast path (round 6): when the WHOLE oriented edge table fits
-    the hub byte budget (``HUB_BUDGET_BYTES`` — the same size guard the hub
-    split already enforces), broadcasting everything strictly dominates the
-    hub split: the adjacency grouping shuffle, the hub-selection
-    aggregation/explode jobs, and the dst-adjacency join all disappear —
-    the layout is the edge table itself (every dst resolved against the
-    broadcast CSR), one repartition+sort from being kernel-ready. Counts
-    and the instrumented probe totals are identical (every edge's
-    |N⁺(dst)| is probed exactly once either way); at web scale the budget
-    fails and the ordinary hub-split path runs unchanged."""
-    hubs = hub_flat = None
-    if hub_k is None:
-        hub_k = HUB_K_DEFAULT
-    if hub_k > 0:
-        budget_rows = max(1, HUB_BUDGET_BYTES // 16)
-        if n_rows is None:
-            n_rows = d.count()
-        if full_csr and n_rows <= min(budget_rows, FULL_CSR_MAX_ROWS):
-            flat_pdf = d.toPandas().rename(columns={"dst": "nbr"})
-            # no nbrs column: the kernel resolves every dst via the broadcast
-            # CSR (see _partition_views — shipping an all-null list column
-            # through Arrow costs more than the whole intersection pass)
-            if num_partitions is not None:
-                laid = d.repartition(num_partitions, "src")
-            else:
-                laid = d.repartition("src")
-            return (
-                laid.sortWithinPartitions("src"),
-                _broadcast_hub_csr(d.sparkSession, flat_pdf),
-            )
-        hubs, hub_flat = _select_hub_csr(d, adj, hub_k)
-    return _assemble_layout(d, adj, hubs, hub_flat, num_partitions)
-
-
-# Hard ceiling for the broadcast flat hub CSR (two int64 columns). The
-# docstring bound "high in-degree ⇒ high rank ⇒ short out-list" (measured
-# 48 MB at m = 7.7M) is now an ENFORCED contract: past the budget the kernel
-# falls back to the plain dst join (hub split disabled) instead of a silent
-# driver/executor memory blow-up — same answers, just without the wedge-
-# replication optimization.
-import os as _os
-
-# Driver/executor byte budget for the broadcast hub CSR. 256 MB suits the
-# sf-scale graphs; at R-MAT scale 22+ (64 M+ edges) the 65 k hubs it admits
-# leave mid-degree destinations (indeg 8..~200) replicating their adjacency
-# through the layout join — measured 5x per-probe slowdown (BENCH/BASELINE.md
-# appendix). On a real cluster this scales with executor memory; here it is
-# env-tunable for the large-graph runs.
-HUB_BUDGET_BYTES = int(_os.environ.get("SPARK_GRAFT_HUB_BUDGET_BYTES", 256 << 20))
-HUB_K_DEFAULT = int(_os.environ.get("SPARK_GRAFT_HUB_K", 65536))
+# Driver/executor byte budget for the broadcast hub CSR (two int64 columns).
+# The bound "high in-degree ⇒ high rank ⇒ short out-list" (measured 48 MB at
+# m = 7.7M) is an ENFORCED contract: past the budget the kernel falls back to
+# the plain dst join (hub split disabled) instead of a silent driver/executor
+# memory blow-up — same answers, just without the wedge-replication
+# optimization. 256 MB suits the sf-scale graphs; at R-MAT scale 22+ (64 M+
+# edges) the 65 k hubs it admits leave mid-degree destinations (indeg
+# 8..~200) replicating their adjacency through the layout join — measured 5x
+# per-probe slowdown (BENCH/BASELINE.md appendix). On a real cluster this
+# scales with executor memory; here it is env-tunable for the large-graph
+# runs.
+HUB_BUDGET_BYTES = int(os.environ.get("SPARK_GRAFT_HUB_BUDGET_BYTES", 256 << 20))
+HUB_K_DEFAULT = int(os.environ.get("SPARK_GRAFT_HUB_K", 65536))
 # Row cap for the full-graph broadcast-CSR fast path (round 6), separate from
 # (and additionally bounded by) the byte budget above. MEASURED crossover vs
 # the hub-split path on R-MAT ef=16, local[32], identical counts:
@@ -716,11 +562,103 @@ HUB_K_DEFAULT = int(_os.environ.get("SPARK_GRAFT_HUB_K", 65536))
 #   7.7 M (scale 19): 2× SLOWER (30-37 s vs 16.5 s — the per-call edge-table
 #   collect + whole-graph rebroadcast stops amortizing). 4 M keeps the win
 #   and never enters the losing regime; env-tunable like the byte budget.
-FULL_CSR_MAX_ROWS = int(_os.environ.get("SPARK_GRAFT_FULL_CSR_ROWS", 4_000_000))
+FULL_CSR_MAX_ROWS = int(os.environ.get("SPARK_GRAFT_FULL_CSR_ROWS", 4_000_000))
 
 
-def _select_hub_csr(d: DataFrame, adj: DataFrame, hub_k: int | None,
-                    budget_bytes: int | None = None):
+def _budget_rows() -> int:
+    return max(1, HUB_BUDGET_BYTES // 16)  # two int64 columns per row
+
+
+def _kernel_layout(
+    d: DataFrame,
+    num_partitions: int | None = None,
+    hub_k: int | None = None,
+    n_rows: int | None = None,
+    adj: DataFrame | None = None,
+    hub_csr: DataFrame | None = None,
+):
+    """The one decision point for the kernel's layout regime. ``d`` is the
+    oriented edge table; returns (laid_out_df, hub_broadcast_or_None) with
+    every src group contiguous — repartition(src) + sortWithinPartitions(src),
+    the DataFrame analogue of the reference's CSR row layout
+    (`util/graph.h:11-12`). ``hub_k = 0`` forces the plain join.
+
+    1. Full-CSR broadcast (round 6) — when the WHOLE oriented edge table
+       fits the hub byte budget and ``FULL_CSR_MAX_ROWS``: broadcasting
+       everything strictly dominates the hub split (the adjacency grouping
+       shuffle, the hub-selection jobs and the dst join all disappear; the
+       layout is the edge table itself). Probe totals are identical (every
+       edge's |N⁺(dst)| is probed exactly once either way). Skipped when the
+       caller passes a pre-grouped ``adj``: the bucketed tables exist so the
+       kernel join is exchange-free on read, and collecting the whole edge
+       table would waive that pay-once layout (and re-collect per query).
+    2. Hub split — the edges ⋈ dst-adjacency join replicates N⁺(dst) once
+       per in-edge of dst, i.e. Σ indeg·outdeg = the wedge count, the
+       dominant data volume on power-law graphs, concentrated on
+       high-in-degree hubs. Those destinations are EXCLUDED from the join
+       and their (short — high rank ⇒ low out-degree) adjacency lists
+       broadcast instead: the re-expression of the reference's
+       dense-hub-range bitmap/packed-words strategy (J2/J3,
+       `triangle_counting.h:9,11-34`) — pay O(hub lists) once per executor
+       instead of once per edge. ``hub_csr`` is a pre-materialized flat hub
+       CSR (src, nbr) that replaces the selection jobs while it fits the
+       budget.
+    3. Plain join — no hubs, or the hub CSR is over budget.
+
+    The left join keeps sink vertices (empty N⁺(dst)) — they contribute 0.
+    When ``d``/``adj`` come from tables bucketed by dst/src, the join plans
+    with ZERO shuffle exchanges (SURVEY §4 "bucketed write"). ``n_rows``:
+    the caller's known row count of ``d`` (skips the full-CSR count job).
+    """
+    spark = d.sparkSession
+    if hub_k is None:
+        hub_k = HUB_K_DEFAULT
+    if adj is None:
+        if hub_k > 0:
+            if n_rows is None:
+                n_rows = d.count()
+            if n_rows <= min(_budget_rows(), FULL_CSR_MAX_ROWS):
+                # no nbrs column: the kernel resolves every dst via the
+                # broadcast CSR (see _partition_views)
+                flat = d.toPandas().rename(columns={"dst": "nbr"})
+                return _by_src(d, num_partitions), _broadcast_hub_csr(spark, flat)
+        # referenced by the hub-collect job AND the kernel job — materialize
+        # once (lazy localCheckpoint), don't rebuild the collect_list
+        adj = adjacency(d, num_partitions).localCheckpoint(eager=False)
+    flat = _collect_within_budget(hub_csr) if hub_csr is not None else None
+    if flat is not None:
+        # hubs with empty out-lists aren't in the CSR and need no anti-join
+        # membership either: they have no adjacency row
+        hubs = hub_csr.select(F.col("src").alias("dst")).distinct()
+    elif hub_k > 0:
+        hubs, flat = _select_hub_csr(d, hub_k)
+    adj_dst = adj.select(F.col("src").alias("dst"), F.col("nbrs"))
+    hub_bc = None
+    if flat is not None:
+        hub_bc = _broadcast_hub_csr(spark, flat)
+        # hub dsts now miss the join → nbrs NULL → kernel consults the
+        # broadcast CSR; genuine sinks are in neither → count 0 either way.
+        adj_dst = adj_dst.join(hubs.hint("broadcast"), "dst", "left_anti")
+    return _by_src(d.join(adj_dst, "dst", "left"), num_partitions), hub_bc
+
+
+def _by_src(df: DataFrame, num_partitions: int | None) -> DataFrame:
+    if num_partitions is not None:
+        df = df.repartition(num_partitions, "src")
+    else:
+        df = df.repartition("src")
+    return df.sortWithinPartitions("src")
+
+
+def _collect_within_budget(flat: DataFrame):
+    """Collect a flat (src, nbr) CSR to the driver through Arrow, as a LIMIT
+    probe against the byte budget: the pandas frame, or None if over it."""
+    budget_rows = _budget_rows()
+    pdf = flat.limit(budget_rows + 1).toPandas()
+    return pdf if len(pdf) <= budget_rows else None
+
+
+def _select_hub_csr(d: DataFrame, hub_k: int):
     """Pick the hub set and collect its flat CSR to the driver.
 
     Hub selection by in-degree THRESHOLD, not top-K: orderBy().limit(K)
@@ -734,13 +672,12 @@ def _select_hub_csr(d: DataFrame, adj: DataFrame, hub_k: int | None,
     ≈ 48 MB at m = 7.7M while absorbing 99.3% of replication).
 
     Returns (hubs_df (dst: long), flat_pdf (src, nbr) pandas, unsorted) — the
-    flat CSR is collected through Arrow as two FLAT int columns (explode):
-    a row-object collect of 65k list rows costs tens of seconds of
-    single-threaded driver work; this is two zero-copy numpy columns. The
-    collect is a LIMIT probe against the byte budget: if the flat CSR would
-    exceed it, returns (None, None) and the caller runs hub-less.
+    flat CSR is collected through Arrow as two FLAT int columns: a
+    row-object collect of 65k list rows costs tens of seconds of
+    single-threaded driver work; this is two zero-copy numpy columns. If the
+    flat CSR would exceed the byte budget, returns (None, None) and the
+    caller runs hub-less.
     """
-    budget = HUB_BUDGET_BYTES if budget_bytes is None else budget_bytes
     indeg = d.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
     candidates = indeg.where(F.col("indeg") >= 8).localCheckpoint(eager=False)
     n_cand = candidates.count()
@@ -749,17 +686,14 @@ def _select_hub_csr(d: DataFrame, adj: DataFrame, hub_k: int | None,
         thresh = candidates.approxQuantile("indeg", [frac], 0.01)[0]
         candidates = candidates.where(F.col("indeg") >= thresh)
     hubs = candidates.select("dst").localCheckpoint(eager=False)
-    budget_rows = max(1, budget // 16)  # two int64 columns per row
     # the flat CSR is the hub vertices' out-EDGES — read them straight off
     # the edge table instead of exploding the grouped adjacency lists (same
     # rows; _broadcast_hub_csr lexsorts driver-side, so order is free)
-    flat_pdf = (
+    flat_pdf = _collect_within_budget(
         d.join(hubs.withColumnRenamed("dst", "src"), "src")
         .select("src", F.col("dst").alias("nbr"))
-        .limit(budget_rows + 1)
-        .toPandas()
     )
-    if len(flat_pdf) > budget_rows:
+    if flat_pdf is None:
         return None, None
     return hubs, flat_pdf
 
@@ -785,24 +719,6 @@ def _broadcast_hub_csr(spark, flat_pdf):
     return spark.sparkContext.broadcast((ids, offsets, values))
 
 
-def _assemble_layout(d, adj, hubs, hub_flat, num_partitions):
-    """Join + src CSR grouping given an (optional) pre-selected hub set."""
-    spark = d.sparkSession
-    hub_bc = None
-    adj_dst = adj.select(F.col("src").alias("dst"), F.col("nbrs"))
-    if hubs is not None:
-        hub_bc = _broadcast_hub_csr(spark, hub_flat)
-        adj_dst = adj_dst.join(hubs.hint("broadcast"), "dst", "left_anti")
-        # hub dsts now miss the join → nbrs NULL → kernel consults the
-        # broadcast CSR; genuine sinks are in neither → count 0 either way.
-    joined = d.join(adj_dst, "dst", "left")
-    if num_partitions is not None:
-        joined = joined.repartition(num_partitions, "src")
-    else:
-        joined = joined.repartition("src")
-    return joined.sortWithinPartitions("src"), hub_bc
-
-
 def triangle_count_kernel(
     edges: DataFrame,
     num_partitions: int | None = None,
@@ -811,34 +727,22 @@ def triangle_count_kernel(
 ) -> DataFrame:
     """Global exact triangle count via the vectorized intersection kernel.
 
-    Physical plan: DODG → adjacency (one shuffle) → hub split (broadcast of
-    top-in-degree adjacency, J2/J3 analogue) → edges ⋈ non-hub adj on dst
-    (one shuffle, AQE-skew-split) → repartition+sort by src → mapInPandas
-    partial sums → final sum over ≤ num_partitions rows. Mirrors
-    `CountTriBMPAndMergeWithPackDODG` (`triangle_counting.h:36-129`) with
-    numpy replacing SIMD intrinsics and map-side partial aggregation replacing
-    the OpenMP reduction. Output: one row ``(triangles: long)``.
+    Physical plan: DODG → ``_kernel_layout`` (full-CSR broadcast, or
+    adjacency + hub split (broadcast of top-in-degree adjacency, J2/J3
+    analogue) + edges ⋈ non-hub adj on dst, AQE-skew-split) →
+    repartition+sort by src → mapInArrow partial sums → final sum over
+    ≤ num_partitions rows. Mirrors `CountTriBMPAndMergeWithPackDODG`
+    (`triangle_counting.h:36-129`) with numpy replacing SIMD intrinsics and
+    map-side partial aggregation replacing the OpenMP reduction. Output: one
+    row ``(triangles: long)``.
 
     ``observation``: an optional ``pyspark.sql.Observation``; after the count
     is consumed it carries ``{"probes": ..., "hits": ...}`` — the instrumented
     intersection work (not wall-time-derived), mirroring the reference's probe
     counters (`2017-karypis-hepc-tc/main.c:49-51`).
     """
-    laid_out, hub_bc = _edges_with_dst_adjacency(edges, num_partitions, hub_k)
-    partials = laid_out.mapInArrow(
-        _make_tc_partition(hub_bc), schema="tri_cnt long, probes long"
-    )
-    if observation is not None:
-        partials = partials.observe(
-            observation,
-            F.sum("probes").alias("probes"),
-            F.sum("tri_cnt").alias("hits"),
-        )
-    # coalesce: an empty graph (zero partitions after AQE) must count 0,
-    # not NULL — the incremental-delta path feeds empty batches here
-    return partials.agg(
-        F.coalesce(F.sum("tri_cnt"), F.lit(0)).cast("long").alias("triangles")
-    )
+    d = orient_dodg(edges).localCheckpoint(eager=False)
+    return _count(*_kernel_layout(d, num_partitions, hub_k), observation)
 
 
 def triangle_count_per_directed_edge_kernel(
@@ -847,9 +751,10 @@ def triangle_count_per_directed_edge_kernel(
     """Per-DODG-edge intersection counts ``(src, dst, cnt)`` — the kernel
     analogue of the reference's per-edge loop body, and the base quantity the
     per-edge support explode starts from."""
-    laid_out, hub_bc = _edges_with_dst_adjacency(edges, num_partitions, hub_k)
+    d = orient_dodg(edges).localCheckpoint(eager=False)
+    laid_out, hub_bc = _kernel_layout(d, num_partitions, hub_k)
     return laid_out.mapInArrow(
-        _make_tc_partition_per_edge(hub_bc), schema="src long, dst long, cnt long"
+        _kernel(_emit_per_edge, hub_bc), schema="src long, dst long, cnt long"
     )
 
 
@@ -875,22 +780,15 @@ def bucketed_kernel_layout(
     ``hub_table``: optional pre-materialized flat hub CSR (src, nbr) written
     by the layout — the hub SELECTION (in-degree agg + threshold/quantile
     jobs) then happens zero times per query instead of once per query; the
-    steady-state kernel pays one small scan + Arrow collect. Hubs with empty
-    out-lists aren't in the CSR and need no anti-join membership either: they
-    have no adjacency row, so both paths yield the same empty set."""
-    d, adj = spark.table(edges_table), spark.table(adj_table)
-    if hub_table is not None:
-        budget_rows = max(1, HUB_BUDGET_BYTES // 16)
-        flat_pdf = spark.table(hub_table).limit(budget_rows + 1).toPandas()
-        if len(flat_pdf) <= budget_rows:
-            hubs = spark.table(hub_table).select(F.col("src").alias("dst")).distinct()
-            return _assemble_layout(d, adj, hubs, flat_pdf, None)
-        # pre-materialized CSR over budget (layout written under a larger
-        # budget): fall through to fresh selection, whose own guard applies
-    # full_csr=False: the bucketed tables exist precisely so the kernel join
-    # is exchange-free on read — collecting the whole edge table would waive
-    # the pay-once layout this path demonstrates (and re-collect per query)
-    return _layout_from_dodg(d, adj, None, hub_k, full_csr=False)
+    steady-state kernel pays one small scan + Arrow collect. A table over
+    the budget (written under a larger one) falls back to fresh selection,
+    whose own guard applies."""
+    return _kernel_layout(
+        spark.table(edges_table),
+        hub_k=hub_k,
+        adj=spark.table(adj_table),
+        hub_csr=spark.table(hub_table) if hub_table is not None else None,
+    )
 
 
 def triangle_count_kernel_bucketed(
@@ -904,22 +802,9 @@ def triangle_count_kernel_bucketed(
     """`triangle_count_kernel` over the pre-bucketed layout: identical result,
     but the DODG build + adjacency grouping shuffles are already on disk and
     the dst join needs no exchange. Output: one row ``(triangles: long)``."""
-    laid_out, hub_bc = bucketed_kernel_layout(
-        spark, edges_table, adj_table, hub_k, hub_table
-    )
-    partials = laid_out.mapInArrow(
-        _make_tc_partition(hub_bc), schema="tri_cnt long, probes long"
-    )
-    if observation is not None:
-        partials = partials.observe(
-            observation,
-            F.sum("probes").alias("probes"),
-            F.sum("tri_cnt").alias("hits"),
-        )
-    # coalesce: an empty graph (zero partitions after AQE) must count 0,
-    # not NULL — the incremental-delta path feeds empty batches here
-    return partials.agg(
-        F.coalesce(F.sum("tri_cnt"), F.lit(0)).cast("long").alias("triangles")
+    return _count(
+        *bucketed_kernel_layout(spark, edges_table, adj_table, hub_k, hub_table),
+        observation,
     )
 
 
@@ -927,34 +812,16 @@ def triangle_per_edge_support_bucketed(
     spark, edges_table: str, adj_table: str, hub_k: int | None = None,
     hub_table: str | None = None,
 ) -> DataFrame:
-    """`triangle_per_edge_support` over the pre-bucketed layout (same explode
-    + groupBy on kernel-enumerated corners; the canonical (u<v) edge set is
+    """`triangle_per_edge_support` over the pre-bucketed layout (same
+    support-partial kernel + groupBy; the canonical (u<v) edge set is
     recovered from the DODG table, which holds each edge exactly once)."""
-    laid_out, hub_bc = bucketed_kernel_layout(
-        spark, edges_table, adj_table, hub_k, hub_table
-    )
-    tris = laid_out.mapInArrow(
-        _make_tc_partition_enumerate(hub_bc), schema="a long, b long, c long"
-    )
-
-    def pair(x, y):
-        return F.struct(
-            F.least(F.col(x), F.col(y)).alias("u"),
-            F.greatest(F.col(x), F.col(y)).alias("v"),
-        )
-
-    incidences = tris.select(
-        F.explode(F.array(pair("a", "b"), pair("a", "c"), pair("b", "c"))).alias("e")
-    ).select(F.col("e.u").alias("u"), F.col("e.v").alias("v"))
-    support = incidences.groupBy("u", "v").agg(
-        F.count(F.lit(1)).cast("long").alias("support")
+    counts = _support_counts(
+        *bucketed_kernel_layout(spark, edges_table, adj_table, hub_k, hub_table)
     )
     edges = spark.table(edges_table).select(
         F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
     )
-    return edges.join(support, ["u", "v"], "left").select(
-        "u", "v", F.coalesce("support", F.lit(0)).cast("long").alias("support")
-    )
+    return _canonical_support(edges, counts)
 
 
 # ---------------------------------------------------------------------------

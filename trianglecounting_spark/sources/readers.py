@@ -19,13 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-def read_edges_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """The canonical source: a parquet/Iceberg edge table (src, dst)."""
-    return spark.read.parquet(path).select(
-        F.col("src").cast("long"), F.col("dst").cast("long")
-    )
-
-
 def read_edges_binary_pairs(spark: SparkSession, path: str, dtype: str = "<u4") -> DataFrame:
     """Raw little-endian (u32,u32) pair files — the reference's `.bin` format
     (`triangle_counting_main.cpp:42-43`: edge count inferred from file size).
