@@ -11,11 +11,14 @@ workarounds anywhere.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from trianglecounting_spark.operators import components
+from trianglecounting_spark.operators import pagerank as pr
 from trianglecounting_spark.operators import triangles as t
 from trianglecounting_spark.operators.components import connected_components
-from trianglecounting_spark.operators.ktruss import ktruss_rounds
+from trianglecounting_spark.operators.ktruss import ktruss, ktruss_rounds
 from trianglecounting_spark.operators.labelprop import label_propagation
 from trianglecounting_spark.operators.pagerank import pagerank
 from trianglecounting_spark.plans.cache import (
@@ -60,6 +63,56 @@ def test_label_propagation_no_cache_leak(spark):
 
 def test_ktruss_rounds_no_cache_leak(spark):
     _assert_clean(spark, lambda e: ktruss_rounds(e, k=4, rounds=2).count())
+
+
+def _directed(e):
+    return e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+
+
+# the other round-driver loops (the four above keep their own tests); each
+# run consumes its result
+DRIVER_LOOPS = {
+    "pagerank_weighted": lambda e: pr.pagerank_weighted(
+        e.select("u", "v", (F.pmod(F.col("u") + F.col("v"), F.lit(3)) + 1).alias("w")),
+        iterations=7,
+    ).agg(F.sum("score")).collect(),
+    "pagerank_directed": lambda e: pr.pagerank_directed(_directed(e), iterations=3)
+    .agg(F.sum("score")).collect(),
+    "personalized_pagerank": lambda e: pr.personalized_pagerank(
+        _directed(e), seeds=[0, 10], iterations=3
+    ).agg(F.sum("score")).collect(),
+    "hits": lambda e: pr.hits(_directed(e), iterations=3).agg(F.sum("hub")).collect(),
+    "salsa": lambda e: pr.salsa(_directed(e), iterations=3).agg(F.sum("hub")).collect(),
+    "eigenvector_centrality": lambda e: pr.eigenvector_centrality(e, iterations=3)
+    .agg(F.sum("score")).collect(),
+    "katz_centrality": lambda e: pr.katz_centrality(e, iterations=3)
+    .agg(F.sum("katz")).collect(),
+    "ktruss": lambda e: ktruss(e, k=4).count(),
+}
+
+
+@pytest.mark.parametrize("name", list(DRIVER_LOOPS))
+def test_driver_loop_no_cache_leak(spark, name):
+    _assert_clean(spark, DRIVER_LOOPS[name])
+
+
+def test_failed_loop_releases_everything(spark, monkeypatch):
+    """An exception mid-loop (here: components' second small-star round)
+    must not leave the edge-side cache or any round's blocks behind."""
+    real, calls = components._small_star, []
+
+    def failing(*args, **kw):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected round failure")
+        return real(*args, **kw)
+
+    monkeypatch.setattr(components, "_small_star", failing)
+    release_all_cached(spark)
+    with pytest.raises(RuntimeError, match="injected"):
+        connected_components(_graph(spark))
+    assert len(calls) == 2
+    assert persistent_rdd_ids(spark) == set()
 
 
 def test_tracked_checkpoint_releases_intermediates(spark):

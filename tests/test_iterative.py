@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from trianglecounting_spark.operators.components import connected_components
 from trianglecounting_spark.operators.ktruss import ktruss, ktruss_rounds
 from trianglecounting_spark.operators.labelprop import label_propagation
+from trianglecounting_spark.operators.normalize import normalize_edges
 from trianglecounting_spark.operators.pagerank import pagerank
 from trianglecounting_spark.plans.checkpoint import IterationCheckpointer
 from trianglecounting_spark.sources import generators as g
@@ -85,21 +86,65 @@ def test_ktruss_rounds_converges_to_fixpoint(spark):
     assert r1 == r3 == fix  # converges in one peel here; extra rounds idempotent
 
 
-def test_checkpoint_resume(spark, tmp_path):
-    """Kill-and-resume: restoring from iteration k yields the same final ranks
-    as an uninterrupted run (north_rule resumability)."""
-    e = g.two_cliques_bridge(spark)
-    full = {r.v: r.score for r in pagerank(e, iterations=8).collect()}
+def _band_graph(spark):
+    """Seeded G(20, 0.43): its 5-truss peel takes 13 rounds to converge."""
+    import random
 
+    rng = random.Random(643)
+    n, p = rng.randint(12, 24), rng.uniform(0.2, 0.45)
+    rows = [(u, v) for u in range(n) for v in range(u + 1, n) if rng.random() < p]
+    return spark.createDataFrame(rows, "u long, v long")
+
+
+def _path(spark):
+    return spark.createDataFrame([(i, i + 1) for i in range(63)], "u long, v long")
+
+
+# name -> (graph, run(edges, rounds, checkpointer), early stop, full rounds)
+RESUMABLE = {
+    "pagerank": (g.two_cliques_bridge,
+                 lambda e, n, ck=None: pagerank(e, iterations=n, checkpointer=ck), 4, 8),
+    "label_propagation": (lambda s: normalize_edges(g.rmat_graph(s, scale=6, edge_factor=4)),
+                          lambda e, n, ck=None: label_propagation(e, rounds=n, checkpointer=ck),
+                          2, 5),
+    "connected_components": (_path,
+                             lambda e, n, ck=None: connected_components(
+                                 e, max_iterations=n, checkpointer=ck), 2, 50),
+    "ktruss": (_band_graph,
+               lambda e, n, ck=None: ktruss(e, 5, max_iterations=n, checkpointer=ck), 4, 100),
+}
+
+
+@pytest.mark.parametrize("name", list(RESUMABLE))
+def test_checkpoint_resume(spark, tmp_path, name):
+    """Kill-and-resume: restoring from round k yields the same final state
+    as an uninterrupted run (north_rule resumability)."""
+    graph, run, stop_at, rounds = RESUMABLE[name]
+    e = graph(spark).localCheckpoint(eager=True)
+    full = sorted(tuple(r) for r in run(e, rounds).collect())
+
+    ck = IterationCheckpointer(spark, str(tmp_path / "ck"), every=2)
+    # stop early, leaving the snapshot of round `stop_at` behind
+    run(e, stop_at, ck)
+    assert ck.latest() == stop_at
+    # resume: a fresh call restores round `stop_at` and continues
+    resumed = sorted(tuple(r) for r in run(e, rounds, ck).collect())
+    assert len(resumed) == len(full)
+    for a, b in zip(full, resumed):
+        assert all(math.isclose(x, y, rel_tol=1e-12) for x, y in zip(a, b)), (a, b)
+
+
+def test_checkpoint_of_another_loop_is_refused(spark, tmp_path):
+    """A snapshot whose columns differ from the loop's state (here a
+    canonical ``(u, v)`` table under k-truss's oriented ``(src, dst)``
+    state) raises ValueError naming the directory and both column lists."""
+    e = g.two_cliques_bridge(spark)
     ck_dir = str(tmp_path / "ck")
-    ck = IterationCheckpointer(spark, ck_dir, every=2)
-    # run only to iteration 4 by asking for 4 iterations with checkpointing
-    pagerank(e, iterations=4, checkpointer=ck)
-    assert ck.latest() == 4
-    # resume: a fresh call for 8 iterations restores iter 4 and continues
-    resumed = {r.v: r.score for r in pagerank(e, iterations=8, checkpointer=ck).collect()}
-    for v in full:
-        assert math.isclose(full[v], resumed[v], rel_tol=1e-12), v
+    ck = IterationCheckpointer(spark, ck_dir, every=1)
+    ck.save(1, e)
+    with pytest.raises(ValueError, match=r"\['u', 'v'\].*\['src', 'dst'\]") as err:
+        ktruss(e, 4, checkpointer=ck)
+    assert ck_dir in str(err.value)
 
 
 def test_checkpoint_metrics_written(spark, tmp_path):
@@ -558,7 +603,7 @@ def test_kcore_incremental_matches_bulk(spark):
 def test_incremental_peels_survive_deep_cascades(spark):
     """Regression for the deep-cascade driver blowup: localCheckpoint leaves
     the RDD DAG chained, and the driver's per-job lineage-path walk is
-    O(refs^depth) — before the _BARRIER_EVERY reliable-checkpoint barrier, a
+    O(refs^depth) — before the BARRIER_EVERY reliable-checkpoint barrier, a
     ~20-round k-core cascade at sf0.1 pinned the driver single-core in
     BigInteger stats arithmetic for >25 min (bulk form: 23 s). These cascades
     run 2.5×+ past the barrier cadence (12), so a reintroduced unbounded walk

@@ -22,12 +22,12 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from trianglecounting_spark.operators.normalize import undirect
 from trianglecounting_spark.plans.cache import release_ids, tracked_checkpoint
 from trianglecounting_spark.plans.checkpoint import IterationCheckpointer
-from trianglecounting_spark.plans.tuning import iteration_partitions, scoped_shuffle_partitions
+from trianglecounting_spark.plans.fixpoint import RoundDriver
+from trianglecounting_spark.plans.tuning import BROADCAST_ROWS, iteration_partitions
 
 
 def _large_star(sym: DataFrame, bc=None) -> DataFrame:
@@ -69,7 +69,7 @@ def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
     checkpointer: IterationCheckpointer | None = None,
-    broadcast_rows: int = 8_000_000,
+    broadcast_rows: int = BROADCAST_ROWS,
 ) -> DataFrame:
     """Exact connected components of the canonical (u<v) edge table.
 
@@ -82,68 +82,48 @@ def connected_components(
     shuffle joins at web scale where |V| does not fit an executor).
     """
     spark = edges.sparkSession
-    vertices = (
-        edges.select(F.explode(F.array("u", "v")).alias("v")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_v = vertices.count()
-    bc = (lambda df: F.broadcast(df)) if n_v <= broadcast_rows else None
-    cur = undirect(edges).distinct()
-    start = 0
-    if checkpointer is not None:
-        restored = checkpointer.restore()
-        if restored is not None:
-            start, cur = restored
-    cur, cur_ids = tracked_checkpoint(cur)
-    n_cur = cur.count()
-    with scoped_shuffle_partitions(spark, iteration_partitions(spark, 2 * n_cur)):
-        for k in range(start + 1, max_iterations + 1):
+    with RoundDriver(spark, checkpointer) as loop:
+        vertices = loop.cache(
+            edges.select(F.explode(F.array("u", "v")).alias("v")).distinct()
+        )
+        n_v = vertices.count()
+        bc = (lambda df: F.broadcast(df)) if n_v <= broadcast_rows else None
+        cur = loop.materialize(loop.resume(undirect(edges).distinct()))
+        n_cur = cur.count()
+
+        def step(_k: int, cur: DataFrame) -> DataFrame:
             # large-star needs the symmetric closure of the current pointer
             # graph; duplicates don't change mins, and _large_star/_small_star
             # dedup their outputs, so no distinct here.
             sym = cur.unionAll(
                 cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             )
-            after_large = _large_star(sym, bc=bc)
-            # tracked localCheckpoint (eager) truncates lineage — without it
-            # each round's plan contains all previous rounds and planning grows
-            # superlinearly — and lets us release round k-1's blocks on time.
-            after_small, next_ids = tracked_checkpoint(_small_star(after_large, bc=bc))
-            # Fixpoint check: both sides are distinct sets, so equal size +
-            # zero rows missing from `cur` ⇒ equal sets. The size probe is a
-            # near-free count on the just-materialized checkpoint; the
-            # membership join runs ONLY when sizes agree (i.e. at most the
-            # final round plus rare coincidences) — early rounds pay one
-            # metadata-cheap action, not a join.
-            n_next = after_small.count()
-            if n_next != n_cur:
-                changed = True
-            else:
-                added = (
-                    after_small.join(cur, ["src", "dst"], "left_anti")
-                    .limit(1)
-                    .count()
-                )
-                changed = added > 0
-            if checkpointer is not None:
-                after_small = checkpointer.maybe_save(k, after_small)
-            # round k is durable and the probe has read round k-1 — release it
-            release_ids(spark, cur_ids)
-            cur, cur_ids, n_cur = after_small, next_ids, n_next
-            if not changed:
-                break
-    # At fixpoint cur is (v, component_min) for every non-minimum vertex;
-    # component minima point at themselves.
-    labels = cur.select(F.col("src").alias("v"), F.col("dst").alias("component"))
-    out, _ = tracked_checkpoint(
-        vertices.join(labels, "v", "left")
-        .select("v", F.coalesce("component", F.col("v")).cast("long").alias("component"))
-    )
-    # the result is materialized — the vertex cache and the final round's
-    # pointer blocks are no longer referenced
-    vertices.unpersist()
-    release_ids(spark, cur_ids)
-    return out
+            return _small_star(_large_star(sym, bc=bc), bc=bc)
+
+        def converged(nxt: DataFrame, cur: DataFrame) -> bool:
+            # Both sides are distinct sets, so equal size + zero rows missing
+            # from `cur` ⇒ equal sets. The size probe is a near-free count on
+            # the just-materialized round; the membership join runs ONLY when
+            # sizes agree (i.e. at most the final round plus rare
+            # coincidences) — early rounds pay one metadata-cheap action, not
+            # a join.
+            nonlocal n_cur
+            n_prev, n_cur = n_cur, nxt.count()
+            return n_cur == n_prev and (
+                nxt.join(cur, ["src", "dst"], "left_anti").limit(1).count() == 0
+            )
+
+        cur = loop.run(
+            cur, step, max_iterations,
+            n_part=iteration_partitions(spark, 2 * n_cur), stop=converged,
+        )
+        # At fixpoint cur is (v, component_min) for every non-minimum vertex;
+        # component minima point at themselves.
+        labels = cur.select(F.col("src").alias("v"), F.col("dst").alias("component"))
+        return loop.finish(
+            vertices.join(labels, "v", "left")
+            .select("v", F.coalesce("component", F.col("v")).cast("long").alias("component"))
+        )
 
 
 def cc_minlabel_unrolled_sql(edges_sql: str, rounds: int = 20) -> str:

@@ -17,20 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from trianglecounting_spark.plans.cache import (
+    BARRIER_EVERY,
     barrier_checkpoint,
     persistent_rdd_ids,
     release_ids,
     tracked_checkpoint,
 )
-
-# Reliable-checkpoint barrier cadence for deep peel cascades. localCheckpoint
-# does NOT cut the underlying RDD DAG, and a driver-side per-job traversal
-# walks lineage PATHS — O(refs^depth). With this loop's ≥3 state references
-# per round, a ~20-round chain cascade at sf0.1 pinned the driver in
-# BigInteger stats arithmetic for >25 min while the bulk peel took 23 s
-# (measured round 5); a file barrier every 12 rounds caps the walkable depth,
-# same contract as operators/scc.py's floods.
-_BARRIER_EVERY = 12
+from trianglecounting_spark.plans.tuning import BROADCAST_ROWS
 
 
 def _peel_once(cur: DataFrame, k: int) -> DataFrame:
@@ -113,7 +106,7 @@ def kcore_incremental(
       O(edges incident to R), not O(|survivors|).
 
     Each round checkpoints both states (eager localCheckpoint, tracked),
-    with a reliable-file barrier every ``_BARRIER_EVERY`` rounds.
+    with a reliable-file barrier every ``BARRIER_EVERY`` rounds.
 
     Bulk-vs-delta, MEASURED (round 5, sf0.1 core = 1.196 M edges, local[32]):
     unlike k-truss — whose bulk round re-runs the triangle kernel and loses
@@ -170,7 +163,7 @@ def kcore_incremental(
             .repartition(n_part, "v")
         )
         before = persistent_rdd_ids(spark)
-        if (_it + 1) % _BARRIER_EVERY == 0:
+        if (_it + 1) % BARRIER_EVERY == 0:
             new_e, new_e_ids = barrier_checkpoint(new_e_plan)
             new_d, new_d_ids = barrier_checkpoint(new_d_plan)
         else:
@@ -200,7 +193,7 @@ def _h_index_agg(values_col: str) -> F.Column:
 def coreness(
     edges: DataFrame,
     max_iterations: int = 200,
-    broadcast_rows: int = 8_000_000,
+    broadcast_rows: int = BROADCAST_ROWS,
 ) -> DataFrame:
     """Per-vertex core number ``(v, coreness)`` via the distributed h-index
     fixpoint (Lü et al., "The H-index of a network node", Nature Comms 2016):
@@ -234,7 +227,7 @@ def coreness(
       ``_h_index_agg`` — an in-group array sort instead of the previous
       partition-wide ``row_number`` window sort — with the h state
       checkpointed per round (tracked, file barrier every
-      ``_BARRIER_EVERY``).
+      ``BARRIER_EVERY``).
 
     Both regimes run the identical integer recurrence to the identical
     fixpoint (H is tie-order-independent), so results are regime- and
@@ -336,7 +329,7 @@ def coreness(
             .select(F.col("u").alias("v"), "h")
         )
         before = persistent_rdd_ids(spark)
-        if it % _BARRIER_EVERY == 0:
+        if it % BARRIER_EVERY == 0:
             new_h, new_ids = barrier_checkpoint(new_plan)
         else:
             new_h, new_ids = tracked_checkpoint(new_plan, before=before)

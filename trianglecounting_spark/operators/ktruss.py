@@ -19,31 +19,26 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from trianglecounting_spark.operators.triangles import triangle_per_edge_support
 from trianglecounting_spark.plans.cache import (
+    BARRIER_EVERY,
     barrier_checkpoint,
     persistent_rdd_ids,
     release_ids,
     tracked_checkpoint,
 )
 from trianglecounting_spark.plans.checkpoint import IterationCheckpointer
-
-# delta-phase lineage-barrier cadence (see kcore.py's _BARRIER_EVERY)
-_KTRUSS_BARRIER_EVERY = 12
-
-
-def _peel_once(cur: DataFrame, k: int) -> DataFrame:
-    sup = triangle_per_edge_support(cur)
-    return sup.where(F.col("support") >= k - 2).select("u", "v")
+from trianglecounting_spark.plans.fixpoint import RoundDriver
+from trianglecounting_spark.plans.tuning import BROADCAST_ROWS
 
 
 def _peel_once_oriented(
     cur_d: DataFrame, k: int, n_rows: int | None = None
 ) -> DataFrame:
     """One support peel on an already-oriented edge table — identical edge
-    sets to ``_peel_once`` on the canonical form (support is
-    orientation-invariant; see ``triangle_per_edge_support_oriented``), but
-    no per-round degree aggregation or orientation joins — and, for the
+    sets to a ``triangle_per_edge_support`` peel on the canonical form
+    (support is orientation-invariant; see
+    ``triangle_per_edge_support_oriented``), but no per-round degree
+    aggregation or orientation joins — and, for the
     k ≥ 3 peel, no join back to the edge table at all: the kernel's
     partial-aggregated support counts omit zero-support edges, which are
     exactly the edges the ``support >= k-2 >= 1`` filter drops."""
@@ -79,34 +74,7 @@ def ktruss(
     aggregation and the two orientation joins gone (the original total order
     stays acyclic on every subgraph, so triangle enumeration remains exact
     and exactly-once; measured ~1.3× per round at sf0.1)."""
-    from trianglecounting_spark.operators.normalize import orient_dodg
-
-    spark = edges.sparkSession
-    cur, cur_ids = tracked_checkpoint(orient_dodg(edges))
-    n_cur = cur.count()
-    start = 0
-    if checkpointer is not None:
-        restored = checkpointer.restore()
-        if restored is not None:
-            start, cur = restored
-            n_cur = cur.count()
-    for it in range(start + 1, max_iterations + 1):
-        # eager localCheckpoint: materialize + truncate lineage per round;
-        # tracked so the previous round's blocks AND the peel's kernel-internal
-        # adjacency/hub materializations are released deterministically
-        before = persistent_rdd_ids(spark)
-        nxt, nxt_ids = tracked_checkpoint(
-            _peel_once_oriented(cur, k, n_rows=n_cur), before=before
-        )
-        n_nxt = nxt.count()
-        if checkpointer is not None:
-            nxt = checkpointer.maybe_save(it, nxt)
-        release_ids(spark, cur_ids)
-        cur, cur_ids = nxt, nxt_ids
-        if n_nxt == n_cur:
-            break
-        n_cur = n_nxt
-    return _canon_uv(cur)
+    return _peel(edges, k, max_iterations, checkpointer, to_fixpoint=True)
 
 
 def ktruss_rounds(edges: DataFrame, k: int, rounds: int) -> DataFrame:
@@ -117,16 +85,37 @@ def ktruss_rounds(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     re-evaluates upstream work exponentially in the round count. Rides the
     same orient-once peel as ``ktruss`` (identical per-round edge sets).
     """
+    return _peel(edges, k, rounds)
+
+
+def _peel(
+    edges: DataFrame,
+    k: int,
+    rounds: int,
+    checkpointer: IterationCheckpointer | None = None,
+    to_fixpoint: bool = False,
+) -> DataFrame:
+    """Up to ``rounds`` oriented support peels, stopping at the first round
+    that removes nothing when ``to_fixpoint`` (which also hands each peel the
+    known survivor count). The driver materializes every round and releases
+    the previous round's blocks and the peel's kernel-internal adjacency/hub
+    materializations."""
     from trianglecounting_spark.operators.normalize import orient_dodg
 
-    spark = edges.sparkSession
-    cur, cur_ids = tracked_checkpoint(orient_dodg(edges))
-    for _ in range(rounds):
-        before = persistent_rdd_ids(spark)
-        cur, nxt_ids = tracked_checkpoint(_peel_once_oriented(cur, k), before=before)
-        release_ids(spark, cur_ids)
-        cur_ids = nxt_ids
-    return _canon_uv(cur)
+    with RoundDriver(edges.sparkSession, checkpointer) as loop:
+        cur = loop.resume(loop.materialize(orient_dodg(edges)))
+        n_cur = cur.count() if to_fixpoint else None
+
+        def step(_it: int, cur: DataFrame) -> DataFrame:
+            return _peel_once_oriented(cur, k, n_rows=n_cur)
+
+        def unchanged(nxt: DataFrame, _cur: DataFrame) -> bool:
+            nonlocal n_cur
+            n_prev, n_cur = n_cur, nxt.count()
+            return n_cur == n_prev
+
+        cur = loop.run(cur, step, rounds, stop=unchanged if to_fixpoint else None)
+        return _canon_uv(cur)
 
 
 def ktruss_unrolled_sql(edges_sql: str, k: int, rounds: int) -> str:
@@ -315,9 +304,9 @@ def ktruss_incremental(
         before = persistent_rdd_ids(spark)
         # deep-cascade guard: localCheckpoint leaves the RDD DAG chained, and
         # the driver's per-job lineage-path walk is O(refs^depth) — a file
-        # barrier every 12 delta rounds caps the depth (see kcore.py's
-        # _BARRIER_EVERY note for the measured blowup; same scc.py contract)
-        if (_it + 1) % _KTRUSS_BARRIER_EVERY == 0:
+        # barrier every BARRIER_EVERY delta rounds caps the depth (see
+        # plans/cache.barrier_checkpoint for the measured blowup)
+        if (_it + 1) % BARRIER_EVERY == 0:
             new_state, new_ids = barrier_checkpoint(new_state_plan)
         else:
             new_state, new_ids = tracked_checkpoint(new_state_plan, before=before)
@@ -350,7 +339,7 @@ def trussness(edges: DataFrame, max_iterations: int = 200) -> DataFrame:
     incidence table (3 rows per triangle, each edge paired with its two
     partner edges) is built ONCE from the Arrow enumeration kernel and
     checkpointed; each round joins the incidence against the per-edge
-    state — BROADCAST when the state is ≤ ``broadcast_rows`` (size-aware;
+    state — BROADCAST when the state is ≤ ``BROADCAST_ROWS`` (size-aware;
     shuffle joins at web scale) — and computes the per-edge H with
     ``kcore._h_index_agg`` (one hash aggregate with an in-group array
     sort) instead of a partition-wide ``row_number`` window: no full sort
@@ -359,7 +348,7 @@ def trussness(edges: DataFrame, max_iterations: int = 200) -> DataFrame:
     partitioning-invariant (h-index is order-independent under ties).
     Convergence on sum(t), which strictly decreases on every non-fixpoint
     round. State checkpointed per round, barrier every
-    ``_KTRUSS_BARRIER_EVERY`` rounds.
+    ``BARRIER_EVERY`` rounds.
 
     Scale: per-round cost is O(3·#triangles) join rows — the same volume
     the per-edge support pass already touches; rounds observed ≤ ~15 on
@@ -369,7 +358,6 @@ def trussness(edges: DataFrame, max_iterations: int = 200) -> DataFrame:
     from trianglecounting_spark.operators.kcore import _h_index_agg
     from trianglecounting_spark.operators.triangles import triangle_enumerate_kernel
 
-    broadcast_rows = 8_000_000
     spark = edges.sparkSession
     tri = triangle_enumerate_kernel(edges)
 
@@ -393,7 +381,7 @@ def trussness(edges: DataFrame, max_iterations: int = 200) -> DataFrame:
     t, t_ids = tracked_checkpoint(
         inc.groupBy("u", "v").agg(F.count(F.lit(1)).cast("long").alias("t"))
     )
-    small = t.count() <= broadcast_rows
+    small = t.count() <= BROADCAST_ROWS
     total = t.agg(F.sum("t")).collect()[0][0]
     for it in range(1, max_iterations + 1):
         t1 = t.select(F.col("u").alias("o1u"), F.col("v").alias("o1v"),
@@ -409,7 +397,7 @@ def trussness(edges: DataFrame, max_iterations: int = 200) -> DataFrame:
             .agg(_h_index_agg("mv").alias("t"))
         )
         before = persistent_rdd_ids(spark)
-        if it % _KTRUSS_BARRIER_EVERY == 0:
+        if it % BARRIER_EVERY == 0:
             new_t, new_ids = barrier_checkpoint(new_plan)
         else:
             new_t, new_ids = tracked_checkpoint(new_plan, before=before)

@@ -18,12 +18,11 @@ fixed-round contract is both deterministic and oracle-expressible.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from trianglecounting_spark.operators.normalize import undirect
-from trianglecounting_spark.plans.cache import release_ids, tracked_checkpoint
 from trianglecounting_spark.plans.checkpoint import IterationCheckpointer
-from trianglecounting_spark.plans.tuning import iteration_partitions, scoped_shuffle_partitions
+from trianglecounting_spark.plans.fixpoint import RoundDriver
+from trianglecounting_spark.plans.tuning import iteration_partitions
 
 
 def label_propagation(
@@ -33,52 +32,34 @@ def label_propagation(
 ) -> DataFrame:
     """Output: ``(v: long, label: long)`` after `rounds` synchronous rounds.
 
-    The result is materialized (lineage-free) before the edge-side cache is
-    released, so callers never silently re-execute the whole round chain."""
+    Every round is materialized (|V| rows) and the previous one released, so
+    the plan never grows and the result is lineage-free before the edge-side
+    cache is released — callers never silently re-execute the round chain."""
     spark = edges.sparkSession
-    m2 = edges.count() * 2
-    n_part = iteration_partitions(spark, m2)
-    # pre-partition the big side by the join key: per-round joins then only
-    # shuffle the |V|-row label table (see pagerank.py); partition count
-    # matches the loop's shuffles so the label join never re-exchanges sym
-    sym = (
-        undirect(edges)
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels = sym.select(F.col("src").alias("v")).distinct().select(
-        "v", F.col("v").alias("label")
-    )
-    start = 0
-    if checkpointer is not None:
-        restored = checkpointer.restore()
-        if restored is not None:
-            start, labels = restored
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for k in range(start + 1, rounds + 1):
+    with RoundDriver(spark, checkpointer) as loop:
+        n_part = iteration_partitions(spark, edges.count() * 2)
+        # pre-partition the big side by the join key: per-round joins then only
+        # shuffle the |V|-row label table (see pagerank.py); partition count
+        # matches the loop's shuffles so the label join never re-exchanges sym
+        sym = loop.cache(undirect(edges).repartition(n_part, "src"))
+        labels = loop.resume(
+            sym.select(F.col("src").alias("v")).distinct().select(
+                "v", F.col("v").alias("label")
+            )
+        )
+
+        def step(_k: int, labels: DataFrame) -> DataFrame:
             nbr_labels = sym.join(labels.withColumnRenamed("v", "src"), "src").select(
                 F.col("dst").alias("v"), "label"
             )
             counted = nbr_labels.groupBy("v", "label").agg(F.count(F.lit(1)).alias("cnt"))
-            labels = counted.groupBy("v").agg(
+            return counted.groupBy("v").agg(
                 (-F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg")))["neg"])
                 .cast("long")
                 .alias("label")
             )
-            if checkpointer is not None:
-                labels = checkpointer.maybe_save(k, labels)
-            else:
-                # materialize each round (|V| rows) and release the previous
-                # one: truncates the growing plan AND pins correctness — the
-                # final unpersist below must not force a sym-less recompute
-                labels, new_ids = tracked_checkpoint(labels)
-                release_ids(spark, prev_ids)
-                prev_ids = new_ids
-    if checkpointer is not None:
-        labels, _ = tracked_checkpoint(labels)
-    sym.unpersist()
-    return labels
+
+        return loop.run(labels, step, rounds, n_part=n_part)
 
 
 def label_propagation_unrolled_sql(edges_sql: str, rounds: int = 4) -> str:

@@ -34,7 +34,11 @@ from pyspark.storagelevel import StorageLevel
 
 from trianglecounting_spark.operators.normalize import undirect
 from trianglecounting_spark.plans.cache import release_ids, tracked_checkpoint
-from trianglecounting_spark.plans.tuning import iteration_partitions, scoped_shuffle_partitions
+from trianglecounting_spark.plans.tuning import (
+    BROADCAST_ROWS,
+    iteration_partitions,
+    scoped_shuffle_partitions,
+)
 
 _M = 1_000_000_007
 _A = 2_654_435_761
@@ -50,7 +54,7 @@ def _h_sql(expr: str) -> str:
 
 
 def maximal_independent_set(
-    edges: DataFrame, max_iterations: int = 50, broadcast_rows: int = 8_000_000
+    edges: DataFrame, max_iterations: int = 50, broadcast_rows: int = BROADCAST_ROWS
 ) -> DataFrame:
     """Output: ``(v: long, in_mis: int)`` for every vertex of ``edges``.
 

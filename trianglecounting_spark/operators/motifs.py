@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from trianglecounting_spark.operators.normalize import orient_dodg, undirect
 from trianglecounting_spark.operators.triangles import triangle_enumerate_from_dodg
+from trianglecounting_spark.plans.tuning import BROADCAST_ROWS
 
 
 def four_clique_count(
@@ -70,16 +71,15 @@ def four_clique_count(
     extension joins) → kernel triangle list (a,b,c) in rank order → extend
     with x ∈ N⁺(c), keep iff (b,x) and (a,x) are DODG edges.
 
-    Round 6: when the DODG fits ``broadcast_rows`` (size-aware — the same
+    Round 6: when the DODG fits ``BROADCAST_ROWS`` (size-aware — the same
     budget class as the kernel's hub CSR), the three extension joins
     BROADCAST the edge table, so the large quads intermediate
     (Σ_tri outdeg(c) rows) is never exchanged — the extension fuses into
     one narrow stage downstream of the enumerate kernel. At web scale the
     joins fall back to the plain shuffles (AQE skew-splits a hot c).
     """
-    broadcast_rows = 8_000_000
     d = orient_dodg(edges).localCheckpoint(eager=False)
-    small = d.count() <= broadcast_rows
+    small = d.count() <= BROADCAST_ROWS
 
     def _b(df):
         return F.broadcast(df) if small else df

@@ -19,19 +19,18 @@ Scale notes (10^10-vertex web graph):
   * edges are re-used every iteration: persist (or read from the bucketed
     Iceberg table) so the scan cost is paid once; the rank join then reuses
     the same hash partitioning on src every iteration.
-  * lineage grows linearly with iterations → checkpoint every `ckpt_every`
-    (parquet/Iceberg snapshot, also the resume point).
+  * the loops run on ``plans/fixpoint.RoundDriver``, which truncates lineage
+    on each one's cadence and owns resume and block release.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql import Column, DataFrame, functions as F
 
 from trianglecounting_spark.operators.normalize import undirect
-from trianglecounting_spark.plans.cache import release_ids, tracked_checkpoint
 from trianglecounting_spark.plans.checkpoint import IterationCheckpointer
-from trianglecounting_spark.plans.tuning import iteration_partitions, scoped_shuffle_partitions
+from trianglecounting_spark.plans.fixpoint import RoundDriver
+from trianglecounting_spark.plans.tuning import iteration_partitions
 
 
 def pagerank(
@@ -55,70 +54,68 @@ def pagerank(
     ``iterations`` as the cap. Costs one extra join-aggregate action per step,
     so the default (None) keeps the fixed-iteration oracle-matched behavior.
     """
-    spark = edges.sparkSession
     sym = undirect(edges)
     out_deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    n = out_deg.count()
-    m2 = edges.count() * 2  # rows of the symmetric edge table
-    n_part = iteration_partitions(spark, m2)
-    # pre-partition the (big) edge side by the join key and cache it: every
-    # iteration's rank join then reuses this distribution and only the
-    # (|V|-row) rank table shuffles — 1 big exchange total instead of 1 per
-    # iteration. Partition count matches the per-iteration shuffles so the
-    # rank join is co-partitioned without re-exchanging the edge side.
-    sym_deg = (
-        sym.join(out_deg, "src")
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    return _undirected_walk(
+        sym, out_deg, edges.count() * 2, F.col("score") / F.col("deg"),
+        iterations, damping, checkpointer, tol,
     )
-    start = 0
-    ranks = out_deg.select(F.col("src").alias("v"), (F.lit(1.0) / n).alias("score"))
-    if checkpointer is not None:
-        restored = checkpointer.restore()
-        if restored is not None:
-            start, ranks = restored
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for k in range(start + 1, iterations + 1):
-            prev_ranks = ranks
-            new_ids: set[int] = set()
+
+
+def _undirected_walk(
+    sym: DataFrame,
+    per_src: DataFrame,
+    m2: int,
+    contrib: Column,
+    iterations: int,
+    damping: float,
+    checkpointer: IterationCheckpointer | None = None,
+    tol: float | None = None,
+) -> DataFrame:
+    """The PageRank walk shared by ``pagerank`` and ``pagerank_weighted``:
+    ``per_src`` is the per-source normalizer table ``(src, …)`` and
+    ``contrib`` the rank a source sends along one ``sym ⋈ per_src`` row."""
+    spark = sym.sparkSession
+    with RoundDriver(spark, checkpointer) as loop:
+        n = per_src.count()
+        n_part = iteration_partitions(spark, m2)
+        # pre-partition the (big) edge side by the join key and cache it: every
+        # iteration's rank join then reuses this distribution and only the
+        # (|V|-row) rank table shuffles — 1 big exchange total instead of 1 per
+        # iteration. Partition count matches the per-iteration shuffles so the
+        # rank join is co-partitioned without re-exchanging the edge side.
+        side = loop.cache(sym.join(per_src, "src").repartition(n_part, "src"))
+        ranks = loop.resume(
+            per_src.select(F.col("src").alias("v"), (F.lit(1.0) / n).alias("score"))
+        )
+
+        def step(_k: int, ranks: DataFrame) -> DataFrame:
             contribs = (
-                sym_deg.join(ranks.withColumnRenamed("v", "src"), "src")
-                .select(F.col("dst").alias("v"), (F.col("score") / F.col("deg")).alias("c"))
+                side.join(ranks.withColumnRenamed("v", "src"), "src")
+                .select(F.col("dst").alias("v"), contrib.alias("c"))
                 .groupBy("v")
                 .agg(F.sum("c").alias("mass"))
             )
-            ranks = contribs.select(
+            return contribs.select(
                 "v", (F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("mass")).alias("score")
             )
-            if checkpointer is not None:
-                ranks = checkpointer.maybe_save(k, ranks)
-            elif tol is not None or k % 5 == 0 or k == iterations:
-                # truncate lineage so the plan doesn't accrete one join per
-                # step; release the previous truncation's blocks NOW — state k
-                # no longer references them once k is materialized (in tol
-                # mode the delta probe still needs rank_{k-1}, so its blocks
-                # are released after the probe below)
-                ranks, new_ids = tracked_checkpoint(ranks)
-                if tol is None:
-                    release_ids(spark, prev_ids)
-                    prev_ids = new_ids
-            if tol is not None:
-                delta = (
-                    ranks.withColumnRenamed("score", "s1")
-                    .join(prev_ranks.withColumnRenamed("score", "s0"), "v")
-                    .agg(F.sum(F.abs(F.col("s1") - F.col("s0"))).alias("d"))
-                    .collect()[0]["d"]
-                )
-                release_ids(spark, prev_ids)
-                prev_ids = new_ids
-                if delta < tol:
-                    break
-    if checkpointer is not None:
-        # the restored/loop state may still reference sym_deg lazily
-        ranks, _ = tracked_checkpoint(ranks)
-    sym_deg.unpersist()
-    return ranks
+
+        def converged(ranks: DataFrame, prev: DataFrame) -> bool:
+            delta = (
+                ranks.withColumnRenamed("score", "s1")
+                .join(prev.withColumnRenamed("score", "s0"), "v")
+                .agg(F.sum(F.abs(F.col("s1") - F.col("s0"))).alias("d"))
+                .collect()[0]["d"]
+            )
+            return delta < tol
+
+        # lineage is truncated every 5 steps (every step in tol mode, whose
+        # delta probe reads both rank_k and rank_{k-1})
+        return loop.run(
+            ranks, step, iterations, n_part=n_part,
+            every=5 if tol is None else 1,
+            stop=None if tol is None else converged,
+        )
 
 
 def pagerank_unrolled_sql(edges_sql: str, iterations: int = 10, damping: float = 0.85,
@@ -161,41 +158,62 @@ def pagerank_directed(
 
     Input: ``(src, dst)`` directed edges (duplicates allowed ⇒ weighted by
     multiplicity, like repeated hyperlinks). Output ``(v, score)`` over every
-    vertex appearing as source or target.
-
-    Scale notes: the edge side is pre-partitioned by src once and cached
-    (iterations shuffle only the |V|-row rank table, as in ``pagerank``);
-    the dangling term is one |V|-row aggregate per iteration — a scalar
-    collect, the textbook implementation on any cluster.
+    vertex appearing as source or target. The dangling term is one
+    |V|-row scalar aggregate per iteration.
     """
-    spark = directed_edges.sparkSession
-    e = directed_edges.select("src", "dst")
-    verts = (
+    return _teleport_walk(directed_edges, iterations, damping)
+
+
+def _vertices(e: DataFrame) -> DataFrame:
+    """Every vertex of a directed ``(src, dst)`` table (lazily checkpointed)."""
+    return (
         e.select(F.col("src").alias("v"))
         .unionAll(e.select(F.col("dst").alias("v")))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n = verts.count()
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    n_part = iteration_partitions(spark, e.count())
-    ed = (
-        e.join(out_deg, "src")
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ed.count()  # materialize the cache before the loop
-    dangling_verts = verts.join(
-        out_deg.select(F.col("src").alias("v")), "v", "left_anti"
-    ).localCheckpoint(eager=False)
-    ranks = verts.select("v", (F.lit(1.0) / n).alias("score"))
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for k in range(1, iterations + 1):
-            # the dangling scalar reads rank_{k-1}, which the end of the
-            # previous iteration materialized (tracked_checkpoint below) —
-            # this collect scans |dangling| in-memory rows, it never replays
-            # the join-agg chain (the round-3 lineage-replay defect)
+
+
+def _teleport_walk(
+    directed_edges: DataFrame,
+    iterations: int,
+    damping: float,
+    seeds: list[int] | None = None,
+) -> DataFrame:
+    """The directed walk shared by ``pagerank_directed`` (uniform teleport,
+    ``seeds=None``) and ``personalized_pagerank`` (teleport to ``seeds``).
+    Each keeps its own literal arithmetic, so neither oracle hash moves."""
+    spark = directed_edges.sparkSession
+    with RoundDriver(spark) as loop:
+        e = directed_edges.select("src", "dst")
+        verts = _vertices(e)
+        if seeds is None:
+            n = verts.count()
+            start = F.lit(1.0) / n
+
+            def score(mass: Column, d_mass: float) -> Column:
+                return F.lit((1.0 - damping) / n) + F.lit(damping) * (mass + F.lit(d_mass / n))
+        else:
+            start = tele = F.when(
+                F.col("v").isin([int(s) for s in seeds]), F.lit(1.0 / len(seeds))
+            ).otherwise(F.lit(0.0))
+
+            def score(mass: Column, d_mass: float) -> Column:
+                return F.lit(1.0 - damping) * tele + F.lit(damping) * (mass + F.lit(d_mass) * tele)
+
+        out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        n_part = iteration_partitions(spark, e.count())
+        ed = loop.cache(e.join(out_deg, "src").repartition(n_part, "src"))
+        ed.count()  # materialize the cache before the loop
+        dangling_verts = verts.join(
+            out_deg.select(F.col("src").alias("v")), "v", "left_anti"
+        ).localCheckpoint(eager=False)
+
+        def step(_k: int, ranks: DataFrame) -> DataFrame:
+            # the dangling scalar reads rank_{k-1}, which the previous round
+            # materialized — this collect scans |dangling| in-memory rows, it
+            # never replays the join-agg chain (the round-3 lineage-replay
+            # defect)
             d_mass = (
                 ranks.join(dangling_verts, "v")
                 .agg(F.coalesce(F.sum("score"), F.lit(0.0)).alias("m"))
@@ -208,24 +226,16 @@ def pagerank_directed(
                 .groupBy("v")
                 .agg(F.sum("c").alias("mass"))
             )
-            ranks = verts.join(contribs, "v", "left").select(
-                "v",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("mass"), F.lit(0.0)) + F.lit(d_mass / n))
-                ).alias("score"),
+            return verts.join(contribs, "v", "left").select(
+                "v", score(F.coalesce(F.col("mass"), F.lit(0.0)), d_mass).alias("score")
             )
-            # checkpoint EVERY iteration: the per-iteration scalar action
-            # forces a job regardless, so letting that job also materialize
-            # the state keeps every action exactly one iteration deep (the
-            # alternative — checkpoint every 5 — made each d_mass collect
-            # replay up to 5 iterations of un-materialized joins)
-            ranks, new_ids = tracked_checkpoint(ranks)
-            release_ids(spark, prev_ids)
-            prev_ids = new_ids
-    ed.unpersist()
-    return ranks
+
+        # materialize EVERY round: the per-round scalar action forces a job
+        # regardless, so letting that job also materialize the state keeps
+        # every action exactly one round deep (materializing every 5 made
+        # each d_mass collect replay up to 5 rounds of joins)
+        return loop.run(verts.select("v", start.alias("score")), step, iterations, n_part=n_part)
+
 
 
 def pagerank_weighted(
@@ -237,11 +247,8 @@ def pagerank_weighted(
     vertex distributes its rank to neighbors proportionally to edge weight —
     rank·w(u,v)/strength(u) with strength = Σ w. The natural form when edges
     carry link multiplicity (repeated hyperlinks between the same pages).
-    Same physical plan as ``pagerank``: the weighted symmetric edge side is
-    pre-partitioned once and cached; iterations shuffle |V|-row tables only.
-    Output ``(v, score)``; Σ score = 1 (no dangling on undirected graphs).
+    Runs ``pagerank``'s walk with the weighted contribution. Output ``(v, score)``; Σ score = 1 (no dangling on undirected graphs).
     """
-    spark = weighted_edges.sparkSession
     sym = weighted_edges.select(
         F.col("u").alias("src"), F.col("v").alias("dst"), "w"
     ).unionAll(
@@ -250,38 +257,11 @@ def pagerank_weighted(
         )
     )
     strength = sym.groupBy("src").agg(F.sum("w").alias("s"))
-    n = strength.count()
-    n_part = iteration_partitions(spark, weighted_edges.count() * 2)
-    sym_s = (
-        sym.join(strength, "src")
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    return _undirected_walk(
+        sym, strength, weighted_edges.count() * 2,
+        F.col("score") * F.col("w") / F.col("s"), iterations, damping,
     )
-    sym_s.count()
-    ranks = strength.select(F.col("src").alias("v"), (F.lit(1.0) / n).alias("score"))
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for k in range(1, iterations + 1):
-            contribs = (
-                sym_s.join(ranks.withColumnRenamed("v", "src"), "src")
-                .select(
-                    F.col("dst").alias("v"),
-                    (F.col("score") * F.col("w") / F.col("s")).alias("c"),
-                )
-                .groupBy("v")
-                .agg(F.sum("c").alias("mass"))
-            )
-            ranks = contribs.select(
-                "v",
-                (F.lit((1.0 - damping) / n)
-                 + F.lit(damping) * F.col("mass")).alias("score"),
-            )
-            if k % 5 == 0 or k == iterations:
-                ranks, new_ids = tracked_checkpoint(ranks)
-                release_ids(spark, prev_ids)
-                prev_ids = new_ids
-    sym_s.unpersist()
-    return ranks
+
 
 
 def pagerank_weighted_unrolled_sql(weighted_edges_sql: str, iterations: int = 10,
@@ -322,70 +302,13 @@ def personalized_pagerank(
 
     rank_{k+1}(v) = (1−d)·p(v) + d·( Σ_{u→v} rank_k(u)/outdeg(u) + D_k·p(v) )
     with p uniform on the seed set (dangling mass D_k also returns to the
-    seeds — the walk restarts where it started). Same physical plan as
-    ``pagerank_directed``: cached pre-partitioned edge side, |V|-row rank
-    shuffles, one scalar dangling aggregate per step.
+    seeds — the walk restarts where it started): ``pagerank_directed``'s
+    walk with the seed teleport.
 
     Output ``(v, score)``; mass concentrates near the seeds and Σ score = 1.
     """
-    spark = directed_edges.sparkSession
-    e = directed_edges.select("src", "dst")
-    verts = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    n_part = iteration_partitions(spark, e.count())
-    ed = (
-        e.join(out_deg, "src")
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ed.count()
-    dangling_verts = verts.join(
-        out_deg.select(F.col("src").alias("v")), "v", "left_anti"
-    ).localCheckpoint(eager=False)
-    p = 1.0 / len(seeds)
-    tele = F.when(F.col("v").isin([int(s) for s in seeds]), F.lit(p)).otherwise(
-        F.lit(0.0)
-    )
-    ranks = verts.select("v", tele.alias("score"))
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for k in range(1, iterations + 1):
-            # rank_{k-1} is materialized (end of previous iteration), so the
-            # dangling scalar is an in-memory scan, not a lineage replay
-            d_mass = (
-                ranks.join(dangling_verts, "v")
-                .agg(F.coalesce(F.sum("score"), F.lit(0.0)).alias("m"))
-                .collect()[0]["m"]
-            )
-            contribs = (
-                ed.join(ranks.withColumnRenamed("v", "src"), "src")
-                .select(F.col("dst").alias("v"),
-                        (F.col("score") / F.col("deg")).alias("c"))
-                .groupBy("v")
-                .agg(F.sum("c").alias("mass"))
-            )
-            ranks = verts.join(contribs, "v", "left").select(
-                "v",
-                (
-                    F.lit(1.0 - damping) * tele
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("mass"), F.lit(0.0))
-                       + F.lit(d_mass) * tele)
-                ).alias("score"),
-            )
-            # checkpoint every iteration — see pagerank_directed: the
-            # per-step scalar already forces a job, so materializing here
-            # keeps every action one iteration deep
-            ranks, new_ids = tracked_checkpoint(ranks)
-            release_ids(spark, prev_ids)
-            prev_ids = new_ids
-    ed.unpersist()
-    return ranks
+    return _teleport_walk(directed_edges, iterations, damping, seeds)
+
 
 
 def personalized_pagerank_unrolled_sql(edges_sql: str, seeds: list[int],
@@ -443,36 +366,26 @@ def hits(directed_edges: DataFrame, iterations: int = 10) -> DataFrame:
     (vertices with no in-links get authority 0; no out-links → hub 0).
     """
     spark = directed_edges.sparkSession
-    e = directed_edges.select("src", "dst")
-    verts = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n = verts.count()
-    n_part = iteration_partitions(spark, e.count())
-    ed = e.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    ed.count()
-    hubs = verts.select("v", (F.lit(1.0) / n).alias("hub"))
-    auths = verts.select("v", F.lit(0.0).alias("authority"))
+    with RoundDriver(spark) as loop:
+        e = directed_edges.select("src", "dst")
+        verts = _vertices(e)
+        n = verts.count()
+        n_part = iteration_partitions(spark, e.count())
+        ed = loop.cache(e.repartition(n_part, "src"))
+        ed.count()
 
-    def _norm_total(t: float | None) -> float:
-        # an exact-0.0 total (degenerate all-zero round) gets the same
-        # treatment as the empty aggregate, and the SQL twin's
-        # coalesce(nullif(sum, 0), 1.0) matches it — a bare `or 1.0` would
-        # be identical here, but spelling the zero case out keeps the
-        # engine/oracle contract explicit
-        return 1.0 if t is None or t == 0.0 else float(t)
+        def _norm_total(t: float | None) -> float:
+            # an exact-0.0 total (degenerate all-zero round) is treated like
+            # the empty aggregate, as the SQL twin's coalesce(nullif(sum, 0), 1.0)
+            return 1.0 if t is None or t == 0.0 else float(t)
 
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for k in range(1, iterations + 1):
+        def step(_k: int, state: tuple[DataFrame, DataFrame]) -> tuple[DataFrame, DataFrame]:
             # materialize each half-step's aggregate BEFORE taking its
             # normalization scalar: the scalar then scans |V| in-memory rows
             # and every downstream plan is at most two joins deep — no action
-            # ever replays a previous iteration's lineage
-            a_raw, a_ids = tracked_checkpoint(
+            # ever replays a previous round's lineage
+            hubs, _ = state
+            a_raw = loop.materialize(
                 ed.join(hubs.withColumnRenamed("v", "src"), "src")
                 .groupBy(F.col("dst").alias("v"))
                 .agg(F.sum("hub").alias("a"))
@@ -481,7 +394,7 @@ def hits(directed_edges: DataFrame, iterations: int = 10) -> DataFrame:
             auths = verts.join(a_raw, "v", "left").select(
                 "v", (F.coalesce(F.col("a"), F.lit(0.0)) / F.lit(a_tot)).alias("authority")
             )
-            h_raw, h_ids = tracked_checkpoint(
+            h_raw = loop.materialize(
                 ed.join(auths.withColumnRenamed("v", "dst"), "dst")
                 .groupBy(F.col("src").alias("v"))
                 .agg(F.sum("authority").alias("h"))
@@ -490,13 +403,15 @@ def hits(directed_edges: DataFrame, iterations: int = 10) -> DataFrame:
             hubs = verts.join(h_raw, "v", "left").select(
                 "v", (F.coalesce(F.col("h"), F.lit(0.0)) / F.lit(h_tot)).alias("hub")
             )
-            # the previous round's raw aggregates are no longer referenced
-            # once this round's are materialized (hubs_{k}/auths_{k} read only
-            # a_raw_{k}/h_raw_{k} + verts)
-            release_ids(spark, prev_ids)
-            prev_ids = a_ids | h_ids
-    ed.unpersist()
-    return hubs.join(auths, "v").select("v", "hub", "authority")
+            return hubs, auths
+
+        hubs, auths = loop.run(
+            (verts.select("v", (F.lit(1.0) / n).alias("hub")),
+             verts.select("v", F.lit(0.0).alias("authority"))),
+            step, iterations, n_part=n_part, every=None,
+        )
+        return loop.finish(hubs.join(auths, "v").select("v", "hub", "authority"))
+
 
 
 def hits_unrolled_sql(edges_sql: str, iterations: int = 10,
@@ -641,38 +556,45 @@ def eigenvector_centrality(
     degree < 10^(38/k) — at the default 4 iterations that is Δ < 3·10^9,
     i.e. any real web graph.
 
-    Per round: one co-partitioned join (the pre-partitioned symmetric edge
-    table never re-shuffles) + one map-side-combined sum — identical shuffle
-    shape to `pagerank`. Output: ``(v, walks: decimal(38,0) → double score)``
-    as ``(v: long, score: double)``, score = x_k(v)/max(x_k) rounded 6dp.
+    Output: ``(v: long, score: double)``, score = x_k(v)/max(x_k) rounded 6dp.
     """
+    with RoundDriver(edges.sparkSession) as loop:
+        x = _walk_counts(loop, edges, iterations)[-1]
+        mx = x.agg(F.max("x").cast("double").alias("__mx"))
+        return x.crossJoin(mx).select(
+            "v",
+            F.round(F.col("x").cast("double") / F.col("__mx"), 6).alias("score"),
+        )
+
+
+def _walk_counts(
+    loop: RoundDriver, edges: DataFrame, iterations: int, retain: bool = False
+) -> list[DataFrame]:
+    """``[x_0, …, x_K]``, x_k(v) = (A^k · 1)(v) as exact decimal(38,0) walk
+    counts over the undirected graph, x_0 = 1 on every non-isolated vertex —
+    the loop shared by ``eigenvector_centrality`` and ``katz_centrality``.
+    Each round is one co-partitioned join + one map-side-combined sum and is
+    materialized; ``retain`` keeps every round's blocks for a result that
+    reads all of them."""
     spark = edges.sparkSession
-    sym = undirect(edges)
     n_part = iteration_partitions(spark, edges.count() * 2)
-    sym_p = sym.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    x = sym_p.select("src").distinct().select(
-        F.col("src").alias("v"), F.lit(1).cast("decimal(38,0)").alias("x")
-    )
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for _ in range(iterations):
-            x = (
-                sym_p.join(x.withColumnRenamed("v", "src"), "src")
-                .groupBy(F.col("dst").alias("v"))
-                .agg(F.sum("x").cast("decimal(38,0)").alias("x"))
-            )
-            # truncate lineage each round (repo-wide iteration rule) and
-            # release the previous round's blocks — they are dead state
-            x, new_ids = tracked_checkpoint(x)
-            release_ids(spark, prev_ids)
-            prev_ids = new_ids
-    mx = x.agg(F.max("x").cast("double").alias("__mx"))
-    out = x.crossJoin(mx).select(
-        "v",
-        F.round(F.col("x").cast("double") / F.col("__mx"), 6).alias("score"),
-    )
-    sym_p.unpersist()
-    return out
+    sym_p = loop.cache(undirect(edges).repartition(n_part, "src"))
+    seen: list[DataFrame] = []
+
+    def step(_k: int, x: DataFrame) -> DataFrame:
+        seen.append(x)
+        return (
+            sym_p.join(x.withColumnRenamed("v", "src"), "src")
+            .groupBy(F.col("dst").alias("v"))
+            .agg(F.sum("x").cast("decimal(38,0)").alias("x"))
+        )
+
+    x0 = sym_p.select(F.col("src").alias("v")).distinct().localCheckpoint(
+        eager=False
+    ).select("v", F.lit(1).cast("decimal(38,0)").alias("x"))
+    x = loop.run(x0, step, iterations, n_part=n_part, retain=retain)
+    return seen + [x]
+
 
 
 def eigenvector_centrality_unrolled_sql(
@@ -716,57 +638,44 @@ def salsa(directed_edges: DataFrame, iterations: int = 5) -> DataFrame:
         h_k(i) = Σ_{i→j} a_k(j)     / indeg(j)      (authority side → hub)
 
     starting from the uniform hub distribution h_0 = 1/|{v: outdeg(v)>0}|.
-    Both steps are stochastic, so mass is conserved exactly — unlike HITS
-    there is NO per-iteration normalization scalar and therefore NO driver
-    action inside the loop: the whole run is |2·iterations| join+agg rounds,
-    each checkpointed. For a connected support graph the stationary
-    authority weight is indeg(j)/m — the property test pins that limit.
+    Both steps are stochastic, so mass is conserved exactly and, unlike
+    HITS, no normalization scalar is collected: a round is two materialized
+    join+aggs. For a connected support graph the stationary authority
+    weight is indeg(j)/m — the property test pins that limit.
 
     Output: ``(v, hub: double, authority: double)`` over ALL vertices of the
     directed graph (vertices with outdeg 0 have hub 0; indeg 0 → authority
-    0). Scale shape: one pre-joined degree-weighted edge table persisted and
-    re-used every round (the same envelope as the PageRank loop); both
-    per-round aggregates are map-side combined vertex sums.
-
-    No counterpart in /root/reference (strictly a TC engine); public-paper
-    algorithm, north-star link-analysis family.
+    0). One pre-joined degree-weighted edge table is cached and re-used
+    every round; both per-round aggregates are map-side combined vertex sums.
     """
     spark = directed_edges.sparkSession
-    e = directed_edges.select("src", "dst")
-    verts = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    od = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("od"))
-    idg = e.groupBy("dst").agg(F.count(F.lit(1)).cast("long").alias("ind"))
-    n_part = iteration_partitions(spark, e.count())
-    # degree-annotated edge table, built once, partitioned like the loop's
-    # first join key
-    ew = (
-        e.join(od, "src")
-        .join(idg, "dst")
-        .select("src", "dst", "od", "ind")
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ew.count()
-    n_hubs = od.count()
-    hubs = od.select(F.col("src").alias("v"), (F.lit(1.0) / n_hubs).alias("hub"))
-    auths = idg.select(F.col("dst").alias("v"), F.lit(0.0).alias("authority"))
+    with RoundDriver(spark) as loop:
+        e = directed_edges.select("src", "dst")
+        verts = _vertices(e)
+        od = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("od"))
+        idg = e.groupBy("dst").agg(F.count(F.lit(1)).cast("long").alias("ind"))
+        n_part = iteration_partitions(spark, e.count())
+        # degree-annotated edge table, built once, partitioned like the loop's
+        # first join key
+        ew = loop.cache(
+            e.join(od, "src")
+            .join(idg, "dst")
+            .select("src", "dst", "od", "ind")
+            .repartition(n_part, "src")
+        )
+        ew.count()
+        n_hubs = od.count()
 
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for _k in range(iterations):
-            a_new, a_ids = tracked_checkpoint(
+        def step(_k: int, state: tuple[DataFrame, DataFrame]) -> tuple[DataFrame, DataFrame]:
+            hubs, _ = state
+            auths = loop.materialize(
                 ew.join(hubs.withColumnRenamed("v", "src"), "src")
                 .groupBy(F.col("dst").alias("v"))
                 .agg(F.sum(F.col("hub") / F.col("od").cast("double")).alias("authority"))
             )
-            h_new, h_ids = tracked_checkpoint(
+            hubs = loop.materialize(
                 ew.join(
-                    a_new.withColumnRenamed("v", "dst").withColumnRenamed(
+                    auths.withColumnRenamed("v", "dst").withColumnRenamed(
                         "authority", "__a"
                     ),
                     "dst",
@@ -774,20 +683,23 @@ def salsa(directed_edges: DataFrame, iterations: int = 5) -> DataFrame:
                 .groupBy(F.col("src").alias("v"))
                 .agg(F.sum(F.col("__a") / F.col("ind").cast("double")).alias("hub"))
             )
-            auths, hubs = a_new, h_new
-            release_ids(spark, prev_ids)
-            prev_ids = a_ids | h_ids
-    out = (
-        verts.join(hubs, "v", "left")
-        .join(auths, "v", "left")
-        .select(
-            "v",
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-            F.coalesce("authority", F.lit(0.0)).alias("authority"),
+            return hubs, auths
+
+        hubs, auths = loop.run(
+            (od.select(F.col("src").alias("v"), (F.lit(1.0) / n_hubs).alias("hub")),
+             idg.select(F.col("dst").alias("v"), F.lit(0.0).alias("authority"))),
+            step, iterations, n_part=n_part, every=None,
         )
-    )
-    ew.unpersist()
-    return out
+        return loop.finish(
+            verts.join(hubs, "v", "left")
+            .join(auths, "v", "left")
+            .select(
+                "v",
+                F.coalesce("hub", F.lit(0.0)).alias("hub"),
+                F.coalesce("authority", F.lit(0.0)).alias("authority"),
+            )
+        )
+
 
 
 def salsa_unrolled_sql(edges_sql: str, iterations: int = 5,
@@ -838,62 +750,34 @@ def katz_centrality(
 
     i.e. every walk of length k ending at v contributes α^k — the classic
     attenuated-influence index (eigenvector centrality weights only the
-    k→∞ limit; Katz counts SHORT reach too, which is what matters on a
-    bounded-diameter web graph). Each w_k is an exact decimal(38,0) vertex
-    sum (partitioning-invariant); the K float multiply-adds happen ONCE per
+    k→∞ limit; Katz counts SHORT reach too). Each w_k is an exact
+    decimal(38,0) vertex sum; the K float multiply-adds happen ONCE per
     vertex at the end in a fixed left-to-right order mirrored in the
     oracle, so the 6dp result is bit-portable. Requires α < 1/λ_max for the
     untruncated series to converge; the truncated form is a deterministic
-    query for any α.
-
-    Per round: one co-partitioned join + one map-side-combined integer sum
-    (the `pagerank` shuffle envelope). Output: ``(v: long, katz: double
-    6dp)`` over all non-isolated vertices.
-
-    No counterpart in /root/reference; public-paper centrality family
-    (see also eigenvector_centrality, pagerank, hits, salsa).
+    query for any α. Output: ``(v: long, katz: double 6dp)`` over all
+    non-isolated vertices.
     """
-    spark = edges.sparkSession
-    sym = undirect(edges)
-    n_part = iteration_partitions(spark, edges.count() * 2)
-    sym_p = sym.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    verts = sym_p.select(F.col("src").alias("v")).distinct().localCheckpoint(
-        eager=False
-    )
-    x = verts.select("v", F.lit(1).cast("decimal(38,0)").alias("x"))
-    walk_tables = []
-    all_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for _k in range(iterations):
-            x = (
-                sym_p.join(x.withColumnRenamed("v", "src"), "src")
-                .groupBy(F.col("dst").alias("v"))
-                .agg(F.sum("x").cast("decimal(38,0)").alias("x"))
+    with RoundDriver(edges.sparkSession) as loop:
+        # every w_k feeds the FINAL select, so (unlike the pure power
+        # iteration) no round's blocks are dead until the result is built
+        x0, *walks = _walk_counts(loop, edges, iterations, retain=True)
+        out = x0.select("v")
+        terms = []
+        for k, wk in enumerate(walks, start=1):
+            out = out.join(
+                wk.select("v", F.col("x").alias(f"__w{k}")), "v", "left"
             )
-            x, new_ids = tracked_checkpoint(x)
-            # every w_k feeds the FINAL select, so (unlike the pure power
-            # iteration) no round's blocks are dead until the result is built
-            all_ids |= new_ids
-            walk_tables.append(x)
-    out = verts
-    terms = []
-    for k, wk in enumerate(walk_tables, start=1):
-        out = out.join(
-            wk.select("v", F.col("x").alias(f"__w{k}")), "v", "left"
-        )
-        terms.append(
-            F.lit(alpha**k)
-            * F.coalesce(F.col(f"__w{k}"), F.lit(0)).cast("double")
-        )
-    # fixed left-to-right accumulation, mirrored in the SQL twin
-    acc = terms[0]
-    for t in terms[1:]:
-        acc = acc + t
-    result = out.select("v", F.round(acc, 6).alias("katz"))
-    result = result.localCheckpoint(eager=True)
-    release_ids(spark, all_ids)
-    sym_p.unpersist()
-    return result
+            terms.append(
+                F.lit(alpha**k)
+                * F.coalesce(F.col(f"__w{k}"), F.lit(0)).cast("double")
+            )
+        # fixed left-to-right accumulation, mirrored in the SQL twin
+        acc = terms[0]
+        for t in terms[1:]:
+            acc = acc + t
+        return loop.finish(out.select("v", F.round(acc, 6).alias("katz")))
+
 
 
 def katz_centrality_unrolled_sql(

@@ -48,20 +48,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from trianglecounting_spark.plans.cache import (
+    BARRIER_EVERY,
     barrier_checkpoint,
     release_ids,
     tracked_checkpoint,
 )
 from trianglecounting_spark.plans.tuning import (
+    BROADCAST_ROWS,
     iteration_partitions,
     scoped_shuffle_partitions,
 )
-
-
-# Reliable-checkpoint cadence for long flood chains — a defensive TRUE
-# lineage barrier (plans/cache.barrier_checkpoint) so a deep flood can never
-# accumulate unbounded chained-localCheckpoint state.
-_BARRIER_EVERY = 12
 
 
 def _minlabel_flood(
@@ -97,7 +93,7 @@ def _minlabel_flood(
 
     ``color`` must be a materialized ``(v, label)`` table; every new state
     is checkpointed before the changed-count action, so no action replays a
-    prior round, and every ``_BARRIER_EVERY`` rounds the state gets a
+    prior round, and every ``BARRIER_EVERY`` rounds the state gets a
     reliable (file) checkpoint as a true lineage barrier.
 
     Round 6: the changed-count rides the checkpointed state as a flag
@@ -143,7 +139,7 @@ def _minlabel_flood(
         new_plan = new_plan.select(
             "v", "label", (F.col("label") < F.col("__l0")).cast("int").alias("__ch")
         )
-        if (_round + 1) % _BARRIER_EVERY == 0:
+        if (_round + 1) % BARRIER_EVERY == 0:
             new_color, new_ids = barrier_checkpoint(new_plan)
         else:
             new_color, new_ids = tracked_checkpoint(new_plan)
@@ -162,7 +158,7 @@ def scc(
     directed_edges: DataFrame,
     max_rounds: int = 20,
     max_inner: int = 100,
-    broadcast_rows: int = 8_000_000,
+    broadcast_rows: int = BROADCAST_ROWS,
 ) -> DataFrame:
     """Exact SCC labels over directed ``(src, dst)`` edges.
 

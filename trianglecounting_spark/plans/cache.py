@@ -168,6 +168,14 @@ def tracked_checkpoint(
     return out, own
 
 
+# Rounds between reliable-checkpoint barriers in the deep peel/flood loops
+# (kcore, k-truss delta and trussness, the scc floods). With ≥3 state
+# references per round, a ~20-round chain cascade at sf0.1 pinned the driver
+# in BigInteger stats arithmetic for >25 min while the bulk peel took 23 s
+# (measured round 5); a file barrier every 12 rounds caps the walkable depth.
+BARRIER_EVERY = 12
+
+
 def barrier_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
     """TRUE lineage barrier: reliable ``checkpoint()`` to the context's
     checkpoint directory (files), which replaces the RDD's dependencies with

@@ -12,6 +12,11 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+# Row budget below which a ≤|V|-row (or ≤|E|-row) side is broadcast into a
+# join or collected to the driver; above it the operators fall back to plain
+# shuffle joins, the web-scale path.
+BROADCAST_ROWS = 8_000_000
+
 
 def iteration_partitions(
     spark: SparkSession, state_rows: int, rows_per_partition: int = 250_000
